@@ -147,6 +147,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # cogrouping each URL with only its slice's bytes — the path the
         # crawl epoch loop uses; no whole-filter broadcast or collect.
         from retailer_scrapers_spark.operators.bloom import (
+            VERIFY_BROADCAST_DEFAULT_ROWS,
             build_bloom_state,
             filter_unseen_split_state,
         )
@@ -160,21 +161,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         seen = urls.filter(F.col("okey") % 3 == 0).select("url_canon")
         from retailer_scrapers_spark.operators.caching import carry_caches
 
-        # Scale-adaptive sizing from the parquet footer (no Spark job;
+        # Scale-adaptive sizing from the parquet footers (no Spark job;
         # guide §2: derive scale-dependent settings from input size, not
         # constants). seen is the okey%3==0 third of orders; the filter
         # keeps ~5 bits/item at any SF (the same ratio the old fixed
         # 1<<18 gave sf0.1, so plans at sf<=0.1 are unchanged), and the
         # verify flips to the count-free shuffled pair once the expected
         # positives (~|seen|) are past the measured broadcast crossover.
+        # Footers only, so this works for a single file or a directory
+        # dataset as Spark writes it.
         import math as _math
 
-        import pyarrow.parquet as _pq
+        import pyarrow.dataset as _ds
 
-        n_orders = _pq.read_metadata(f"{sf}/orders.parquet").num_rows
+        n_orders = _ds.dataset(f"{sf}/orders.parquet", format="parquet").count_rows()
         seen_est = max(n_orders // 3, 64)
         m_bits = 1 << max(18, _math.ceil(_math.log2(seen_est * 5)))
-        verify_rows = None if seen_est <= 200_000 else -1
+        verify_rows = None if seen_est <= VERIFY_BROADCAST_DEFAULT_ROWS else -1
         state = build_bloom_state(seen, m_bits=m_bits, k_hashes=7, n_slices=8)
         unseen, _dup = filter_unseen_split_state(
             urls.select("url_canon"), state, seen, n_slices=8,

@@ -7,10 +7,10 @@ Default run (what the driver invokes):
      "queries": {...per-query seconds...}, "sf": 0.1, ...}
 
 The headline metric is the north-star inner loop measured end-to-end:
-canonicalize (F8) → Bloom build over the seen half → Bloom-prefiltered
-exact dedup (D6) → host-bucketed top-k (R6) over a synthetic frontier
-(``$SPARK_GRAFT_BENCH_N`` URLs, default 2,000,000 — a hash-extrapolated
-stand-in for the 10^10 frontier shape). ``queries`` carries wall times
+canonicalize (F8) → slice-routed Bloom state over the seen half →
+Bloom-prefiltered exact dedup (D6) → host-bucketed top-k (R6) over a
+synthetic frontier (``$SPARK_GRAFT_BENCH_N`` URLs, default 2,000,000 —
+a hash-extrapolated stand-in for the 10^10 frontier shape). ``queries`` carries wall times
 of the oracle-checked operator suite at ``$SPARK_GRAFT_SF_DIR``
 (default sf0.1).
 
@@ -67,18 +67,23 @@ HEADLINE = [
 def frontier_throughput(spark, n_urls: int, warm_pass: bool = True) -> dict:
     """URLs fetched+deduped/sec over a synthetic frontier of ``n_urls``.
 
-    Pipeline: generate → canonicalize → Bloom(seen half) → exact
-    Bloom-prefiltered dedup → top-k per host → count survivors.
+    Pipeline: generate → canonicalize → Bloom state over the seen half →
+    slice-routed Bloom-prefiltered exact dedup → top-k per host → count
+    survivors. The filter is held as per-slice state rows and probed by
+    routing each URL to its slice's cogroup task — the transport the
+    crawl epoch loop runs.
     """
     from pyspark.sql import functions as F
 
     from retailer_scrapers_spark.functions.urls import canonicalize_urls
-    from retailer_scrapers_spark.operators.bloom import BloomFilter, build_bloom, filter_unseen
-    from retailer_scrapers_spark.operators.frontier import topk_per_host
+    from retailer_scrapers_spark.operators.bloom import build_bloom_state, filter_unseen_split_state
+    from retailer_scrapers_spark.operators.frontier import salt_hot_hosts, topk_per_host
+    from retailer_scrapers_spark.operators.politeness import politeness_schedule
 
     import math
 
     n_hosts = max(n_urls // 2048, 16)  # ~2k URLs per host
+    n_slices = 32
     raw = spark.range(n_urls).select(
         F.concat(
             F.lit("https://Host"),
@@ -95,15 +100,6 @@ def frontier_throughput(spark, n_urls: int, warm_pass: bool = True) -> dict:
     seen = canonicalize_urls(raw.filter(F.col("id") % 2 == 0), "url").select("url_canon").persist()
     seen.count()
 
-    # warm-up (NOT timed): spin up the Python workers + JIT the codegen
-    # paths once per parallelism level, as a long-lived cluster would have
-    warm = spark.range(spark.sparkContext.defaultParallelism * 4).select(F.concat(F.lit("https://w.test/"), F.col("id").cast("string")).alias("url_canon"))
-    build_bloom(warm.repartition(spark.sparkContext.defaultParallelism), m_bits=1 << 10, k_hashes=3)
-
-    from retailer_scrapers_spark.operators.bloom import build_bloom_state, filter_unseen_split_state
-    from retailer_scrapers_spark.operators.frontier import salt_hot_hosts
-    from retailer_scrapers_spark.operators.politeness import politeness_schedule
-
     def one_pass() -> dict:
         # timed stage 1: canonicalize the incoming frontier (F8)
         t0 = time.time()
@@ -115,17 +111,17 @@ def frontier_throughput(spark, n_urls: int, warm_pass: bool = True) -> dict:
         frontier.count()
         t_canon = time.time() - t0
 
-        # timed stage 2: per-partition Bloom build over the seen set + merge
+        # timed stage 2: slice-routed Bloom state build over the seen set
         t1 = time.time()
         m_bits = max(64, int(-(n_urls // 2) * math.log(1e-3) / (math.log(2) ** 2)))
-        bloom = build_bloom(seen, m_bits=m_bits, k_hashes=10)
+        state = build_bloom_state(seen, m_bits=m_bits, k_hashes=10, n_slices=n_slices).persist()
+        state.count()
         t_build = time.time() - t1
 
         # timed stage 3: Bloom-prefiltered exact dedup (D6) + host top-k (R6)
         t2 = time.time()
-        unseen = filter_unseen(frontier, bloom, seen)
-        survivors = topk_per_host(unseen, per_host_budget=1 << 30)
-        n_out = survivors.count()
+        unseen, _dup = filter_unseen_split_state(frontier, state, seen, n_slices=n_slices)
+        n_out = topk_per_host(unseen, per_host_budget=1 << 30).count()
         t_dedup = time.time() - t2
 
         # timed stage 4: skew salting (R7) + per-(host,salt) politeness
@@ -139,30 +135,9 @@ def frontier_throughput(spark, n_urls: int, warm_pass: bool = True) -> dict:
         t_sched = time.time() - t3
 
         assert n_out == n_urls - n_urls // 2, f"dedup wrong: {n_out}"
-
-        # the SLICE-ROUTED transport (the epoch loop's actual path at 10^10
-        # scale, where the ~17.9 GB filter cannot broadcast): same pipeline,
-        # filter held as a per-slice state DataFrame, probe routes each URL
-        # to its slice's cogroup task. At this (2M-URL / ~17 MB-filter)
-        # scale the broadcast probe above is legitimately optimal — this
-        # number documents the crossover cost, not a regression.
-        n_slices = 32
-        t4 = time.time()
-        state = build_bloom_state(seen, m_bits=m_bits, k_hashes=10, n_slices=n_slices)
-        state = state.persist()
-        state.count()
-        t_sbuild = time.time() - t4
-        t5 = time.time()
-        unseen_s, _dup = filter_unseen_split_state(frontier, state, seen, n_slices=n_slices)
-        n_out_s = topk_per_host(unseen_s, per_host_budget=1 << 30).count()
-        t_sdedup = time.time() - t5
         state.unpersist()
         frontier.unpersist()
-        assert n_out_s == n_out, f"sliced dedup wrong: {n_out_s}"
-        return {
-            "canon": t_canon, "build": t_build, "dedup": t_dedup, "sched": t_sched,
-            "sbuild": t_sbuild, "sdedup": t_sdedup, "n_sched": n_sched,
-        }
+        return {"canon": t_canon, "build": t_build, "dedup": t_dedup, "sched": t_sched, "n_sched": n_sched}
 
     # pass 1 = COLD (headline, methodology identical to every prior
     # round); pass 2 = WARM, same plans re-executed — what a long-lived
@@ -172,15 +147,12 @@ def frontier_throughput(spark, n_urls: int, warm_pass: bool = True) -> dict:
     cold = one_pass()
     warm2 = one_pass() if warm_pass else None
     total = cold["canon"] + cold["build"] + cold["dedup"] + cold["sched"]
-    sliced_total = cold["canon"] + cold["sbuild"] + cold["sdedup"] + cold["sched"]
     out_warm = {}
     if warm2 is not None:
         total_w = warm2["canon"] + warm2["build"] + warm2["dedup"] + warm2["sched"]
-        sliced_total_w = warm2["canon"] + warm2["sbuild"] + warm2["sdedup"] + warm2["sched"]
         out_warm = {
             "total_sec_warm": round(total_w, 3),
             "urls_per_sec_warm": round(n_urls / total_w, 1),
-            "sliced_urls_per_sec_warm": round(n_urls / sliced_total_w, 1),
         }
     return {
         "n_urls": n_urls,
@@ -192,9 +164,6 @@ def frontier_throughput(spark, n_urls: int, warm_pass: bool = True) -> dict:
         "n_scheduled": cold["n_sched"],
         "total_sec": round(total, 3),
         "urls_per_sec": round(n_urls / total, 1),
-        "sliced_state_build_sec": round(cold["sbuild"], 3),
-        "sliced_dedup_topk_sec": round(cold["sdedup"], 3),
-        "sliced_urls_per_sec": round(n_urls / sliced_total, 1),
         **out_warm,
     }
 
@@ -304,7 +273,11 @@ def sweeps_report() -> None:
 
     from retailer_scrapers_spark import get_spark
     from retailer_scrapers_spark.functions.urls import canonicalize_urls
-    from retailer_scrapers_spark.operators.bloom import build_bloom, filter_unseen, probe_bloom
+    from retailer_scrapers_spark.operators.bloom import (
+        build_bloom_state,
+        filter_unseen_split_state,
+        probe_filter_state,
+    )
     from retailer_scrapers_spark.operators.frontier import topk_per_host
 
     spark = get_spark("bench-sweeps", cores=CPUS)
@@ -333,19 +306,23 @@ def sweeps_report() -> None:
         m_bits = max(64, int(-n_seen * math.log(fpp) / (math.log(2) ** 2)))
         k = max(1, round(m_bits / n_seen * math.log(2)))
         t0 = time.time()
-        b = build_bloom(seen, m_bits=m_bits, k_hashes=k)
-        return b, m_bits, k, time.time() - t0
+        state = build_bloom_state(seen, m_bits=m_bits, k_hashes=k).persist()
+        state.count()
+        return state, m_bits, k, time.time() - t0
+
+    def unseen_of(state):
+        return filter_unseen_split_state(frontier, state, seen)[0]
 
     # --- partition-count sweep (fixed 1e-3 filter) ---------------------
-    bloom_mid, _, _, _ = bloom_for(1e-3)
-    # untimed warm pass: python workers + broadcast + codegen, so the
-    # first swept level doesn't absorb one-time costs
-    topk_per_host(filter_unseen(frontier, bloom_mid, seen), per_host_budget=1 << 30).count()
+    state_mid, _, _, _ = bloom_for(1e-3)
+    # untimed warm pass: python workers + codegen, so the first swept
+    # level doesn't absorb one-time costs
+    topk_per_host(unseen_of(state_mid), per_host_budget=1 << 30).count()
     part_rows = []
     for p in (8, 32, 128):
         spark.conf.set("spark.sql.shuffle.partitions", str(p))
         t0 = time.time()
-        cnt = topk_per_host(filter_unseen(frontier, bloom_mid, seen), per_host_budget=1 << 30).count()
+        cnt = topk_per_host(unseen_of(state_mid), per_host_budget=1 << 30).count()
         dt = time.time() - t0
         assert cnt == n - n_seen
         part_rows.append({"shuffle_partitions": p, "dedup_topk_sec": round(dt, 3), "urls_per_sec": round(n / dt, 1)})
@@ -354,12 +331,13 @@ def sweeps_report() -> None:
     # --- filter-size sweep ---------------------------------------------
     filt_rows = []
     for fpp in (1e-2, 1e-3, 1e-4):
-        bloom, m_bits, k, t_build = bloom_for(fpp)
-        pos = probe_bloom(frontier, bloom).filter(F.col("__maybe_seen")).count()
+        state, m_bits, k, t_build = bloom_for(fpp)
+        pos = probe_filter_state(frontier, state).filter(F.col("__maybe_seen")).count()
         fp = pos - n_seen  # the seen half always probes positive
         t1 = time.time()
-        cnt = filter_unseen(frontier, bloom, seen).count()
+        cnt = unseen_of(state).count()
         t_dedup = time.time() - t1
+        state.unpersist()
         assert cnt == n - n_seen
         filt_rows.append(
             {

@@ -2,50 +2,54 @@
 
 The reference keeps a driver-side ``visited_pages`` set
 (scrape_shoprite.py:417-425); at 10^10 URLs that must become a
-distributed membership structure. Design:
+distributed membership structure. The filter lives as a per-slice state
+DataFrame (``schemas.SEEN_FILTER_STATE``) end to end; nothing
+O(|filter|) ever reaches the driver or a broadcast. Design:
 
 - hashes are computed JVM-side (``xxhash64`` twice with different
   seeds — Kirsch-Mitzenmacher double hashing gives k indexes from 2);
-- each partition builds a local bit array over its rows via
-  ``mapInArrow`` (numpy, vectorized);
-- the driver OR-merges the per-partition arrays (a few MB each) and
-  re-broadcasts the union for the next epoch's probe;
-- probing is a scalar Arrow UDF over the two hash columns against the
-  broadcast bits.
+- the bit table is split into ``n_slices`` disjoint sub-filters of
+  ``m_slice`` bits; a key belongs to the slice in the low bits of h1 and
+  sets local = ((h1 >> log2(n_slices)) + i·(h2|1)) mod m_slice;
+- build (:func:`build_bloom_state`): keys shuffle by slice id and each
+  ``mapInArrow`` task sets the bits of the slices it received (numpy,
+  vectorized), one state row per slice;
+- merge (:func:`merge_filter_state`): two states OR together by slice
+  id in an executor-side group-by;
+- probe (:func:`probe_filter_state`): frontier rows shuffle by slice id
+  and cogroup with only their slice's state row(s); one Arrow task per
+  slice probes its batch against a few-MB sub-filter.
 
 Exactness: Bloom probes have false positives but NO false negatives,
 so the engine uses the filter as a *prefilter*: probe-positive rows are
 verified with an exact anti-join against the seen table (tiny input
-after the prefilter); probe-negative rows pass directly. The final
-URL-seen set is therefore exact (north_rule) while the big anti-join
-shrinks by ~(1 − fpp) at scale.
+after the prefilter); probe-negative rows pass directly
+(:func:`filter_unseen_split_state`). The final URL-seen set is
+therefore exact (north_rule) while the big anti-join shrinks by
+~(1 − fpp) at scale.
 
 Sizing: m = −n·ln(p)/ln(2)², k = (m/n)·ln(2). For n = 10^10 and
-p = 1e−3 this is ~17.9 GB of bits cluster-wide — per-partition slices
-of a few MB each, which is why the structure is partitioned and
+p = 1e−3 this is ~17.9 GB of bits cluster-wide — per-slice rows of a
+few MB each, which is why the structure is partitioned and
 checkpointed rather than driver-resident.
 """
 
 from __future__ import annotations
 
-import math
-import struct
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_HEADER = struct.Struct("<QQIQI")  # m_bits, n_words, k_hashes, n_items, n_slices
 H1_SEED = 0
 H2_SEED = 1
 
 
 def _scatter_bits(words: np.ndarray, idx: np.ndarray) -> None:
-    """OR the global bit indexes ``idx`` into the uint64 ``words`` table,
+    """OR the bit indexes ``idx`` into the uint64 ``words`` table,
     picking the faster of two bit-exact strategies by density:
 
     - dense (≥ ~1/64 set-bit per table bit): boolean scatter + one
@@ -66,120 +70,6 @@ def _scatter_bits(words: np.ndarray, idx: np.ndarray) -> None:
         np.bitwise_or.at(
             words, idx >> 6, np.uint64(1) << (idx.astype(np.uint64) & np.uint64(63))
         )
-
-
-class BloomFilter:
-    """Numpy-backed Bloom filter with Kirsch-Mitzenmacher double hashing."""
-
-    def __init__(
-        self,
-        m_bits: int,
-        k_hashes: int,
-        bits: np.ndarray | None = None,
-        n_items: int = 0,
-        n_slices: int = 1,
-    ):
-        """``n_slices`` > 1 selects the KEY-SPACE-SLICED layout: the bit
-        table is split into ``n_slices`` disjoint sub-filters and a key
-        belongs to exactly one slice (low bits of h1). Each partition
-        then builds only the slices its keys hash to — total build work
-        and state volume stay O(m) no matter how many partitions run,
-        where the naive per-partition-full-filter design costs O(m × P).
-        ``n_slices`` must be a power of two (so int64 masking == uint64
-        modulo); 1 degenerates to a classic single filter."""
-        assert n_slices & (n_slices - 1) == 0, "n_slices must be a power of two"
-        self.n_slices = int(n_slices)
-        self.m_slice = ((int(m_bits) + n_slices * 64 - 1) // (n_slices * 64)) * 64
-        self.m_bits = self.m_slice * self.n_slices
-        self.k = int(k_hashes)
-        n_words = self.m_bits // 64
-        self.bits = bits if bits is not None else np.zeros(n_words, dtype=np.uint64)
-        self.n_items = int(n_items)
-
-    @classmethod
-    def for_capacity(cls, n: int, fpp: float = 1e-3) -> "BloomFilter":
-        n = max(n, 1)
-        m = max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
-        k = max(1, round(m / n * math.log(2)))
-        return cls(m, k)
-
-    def _indexes(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        """(len, k) GLOBAL bit indexes; inputs are int64 from xxhash64."""
-        u1 = h1.astype(np.uint64)
-        u2 = h2.astype(np.uint64) | np.uint64(1)  # odd so strides cover the table
-        i = np.arange(self.k, dtype=np.uint64)[None, :]
-        if self.n_slices == 1:
-            return (u1[:, None] + i * u2[:, None]) % np.uint64(self.m_bits)
-        shift = np.uint64(self.n_slices.bit_length() - 1)
-        s = u1 & np.uint64(self.n_slices - 1)
-        local = ((u1 >> shift)[:, None] + i * u2[:, None]) % np.uint64(self.m_slice)
-        return s[:, None] * np.uint64(self.m_slice) + local
-
-    def add_hashes(self, h1: np.ndarray, h2: np.ndarray) -> None:
-        """Set bits for a hash batch.
-
-        Implementation note (density hybrid, r6): a boolean scatter
-        (`bool_arr[idx] = True`, duplicate-safe because OR is
-        idempotent) plus one `packbits` pass is ~20× faster than
-        `np.bitwise_or.at` at millions of keys — but it materializes
-        m_bits BOOLEANS and scans them all, which inverts for a big
-        SPARSE table (the r6 4 GiB big-filter leg spent ~200 s in
-        1 GiB-per-task bool temporaries). Below ~1 set bit per 64 table
-        bits the word-wise scatter wins; both paths set identical bits.
-        """
-        idx = self._indexes(np.asarray(h1, dtype=np.int64), np.asarray(h2, dtype=np.int64)).ravel()
-        _scatter_bits(self.bits, idx)
-        self.n_items += len(h1)
-
-    def contains_hashes(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        if len(h1) == 0:
-            return np.zeros(0, dtype=bool)
-        idx = self._indexes(np.asarray(h1, dtype=np.int64), np.asarray(h2, dtype=np.int64))
-        words = self.bits[(idx // 64).astype(np.int64)]
-        hit = (words >> (idx % np.uint64(64))).astype(np.uint64) & np.uint64(1)
-        return hit.all(axis=1)
-
-    def merge(self, other: "BloomFilter") -> "BloomFilter":
-        assert (self.m_bits, self.k, self.n_slices) == (other.m_bits, other.k, other.n_slices), "incompatible filters"
-        self.bits |= other.bits
-        self.n_items += other.n_items
-        return self
-
-    def serialize(self) -> bytes:
-        return _HEADER.pack(self.m_bits, len(self.bits), self.k, self.n_items, self.n_slices) + self.bits.tobytes()
-
-    @classmethod
-    def deserialize(cls, data: bytes) -> "BloomFilter":
-        m_bits, n_words, k, n_items, n_slices = _HEADER.unpack(data[: _HEADER.size])
-        bits = np.frombuffer(data[_HEADER.size :], dtype=np.uint64, count=n_words).copy()
-        return cls(m_bits, k, bits, n_items, n_slices)
-
-    @classmethod
-    def deserialize_readonly(cls, data: bytes) -> "BloomFilter":
-        """Zero-copy view over the serialized bytes (probe-only use)."""
-        m_bits, n_words, k, n_items, n_slices = _HEADER.unpack(data[: _HEADER.size])
-        bits = np.frombuffer(data[_HEADER.size :], dtype=np.uint64, count=n_words)
-        return cls(m_bits, k, bits, n_items, n_slices)
-
-
-def filter_state_rows(bloom: BloomFilter) -> list[tuple]:
-    """Per-slice checkpoint rows (north_rule: the serialized membership
-    filter state is partitioned, not one driver blob). Row shape matches
-    ``schemas.SEEN_FILTER_STATE`` (partition_id == slice_id)."""
-    words = bloom.m_slice // 64 if bloom.n_slices > 1 else len(bloom.bits)
-    rows = []
-    for s in range(bloom.n_slices):
-        seg = bloom.bits[s * words : (s + 1) * words]
-        rows.append((s, bytearray(seg.tobytes()), bloom.n_items, bloom.m_bits, bloom.k, bloom.n_slices))
-    return rows
-
-
-def filter_from_state_rows(rows) -> BloomFilter:
-    """Rebuild the filter from checkpointed per-slice rows."""
-    rows = sorted(rows, key=lambda r: r[0])
-    _, _, n_items, m_bits, k, n_slices = rows[0][0], None, rows[0][2], rows[0][3], rows[0][4], rows[0][5]
-    bits = np.concatenate([np.frombuffer(bytes(r[1]), dtype=np.uint64) for r in rows])
-    return BloomFilter(m_bits, k, bits.copy(), n_items, n_slices)
 
 
 def with_url_hashes(df: DataFrame, url_col: str = "url_canon") -> DataFrame:
@@ -218,13 +108,18 @@ def build_bloom_state(
     slice; slices no key hashed to have no row (all-zero bits —
     probe treats a missing slice as empty). ``n_items``/``m_bits`` are
     per-slice count / GLOBAL bit-table size respectively.
+
+    ``n_slices`` must be a power of two (so int64 masking == uint64
+    modulo). Each slice holds ``m_bits / n_slices`` bits rounded up to
+    whole 64-bit words, and the state rows declare the aligned total.
     """
     spark = df.sparkSession
     if n_slices is None:
         n_slices = _next_pow2(spark.sparkContext.defaultParallelism)
-    template = BloomFilter(m_bits, k_hashes, n_slices=n_slices)
-    m_slice, shift = template.m_slice, n_slices.bit_length() - 1
-    m_bits_aligned = template.m_bits
+    assert n_slices & (n_slices - 1) == 0, "n_slices must be a power of two"
+    m_slice = ((int(m_bits) + n_slices * 64 - 1) // (n_slices * 64)) * 64
+    m_bits_aligned = m_slice * n_slices
+    shift = n_slices.bit_length() - 1
 
     hashed = (
         with_url_hashes(df, url_col)
@@ -306,81 +201,6 @@ def merge_filter_state(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b).groupBy("partition_id").applyInArrow(fold, STATE_DDL)
 
 
-def build_bloom(
-    df: DataFrame,
-    url_col: str = "url_canon",
-    m_bits: int = 1 << 20,
-    k_hashes: int = 7,
-    n_slices: int | None = None,
-) -> BloomFilter:
-    """Driver-resident form of :func:`build_bloom_state` — collects the
-    per-slice rows into one :class:`BloomFilter` object. Valid ONLY when
-    the filter fits driver memory comfortably (small/mid-scale jobs,
-    tests, the bench's broadcast-probe baseline); the crawl epoch loop
-    uses the state-DataFrame path end to end."""
-    spark = df.sparkSession
-    if n_slices is None:
-        n_slices = _next_pow2(spark.sparkContext.defaultParallelism)
-    out = BloomFilter(m_bits, k_hashes, n_slices=n_slices)
-    words_per_slice = out.m_slice // 64
-    for row in build_bloom_state(df, url_col, m_bits, k_hashes, n_slices).collect():
-        seg = np.frombuffer(bytes(row.filter_bytes), dtype=np.uint64, count=words_per_slice)
-        lo = row.partition_id * words_per_slice
-        out.bits[lo : lo + words_per_slice] |= seg
-        out.n_items += row.n_items
-    return out
-
-
-_probe_filter_cache: dict[int, tuple] = {}
-
-
-def _deserialize_any(data: bytes):
-    """Dispatch on the serialization tag: cuckoo blobs are prefixed with
-    CKF1 (operators/cuckoo.py); everything else is a Bloom filter."""
-    if data[:4] == b"SCK1":
-        from retailer_scrapers_spark.operators.cuckoo import SlicedCuckoo
-
-        return SlicedCuckoo.deserialize(data)
-    if data[:4] == b"CKF1":
-        from retailer_scrapers_spark.operators.cuckoo import CuckooFilter
-
-        return CuckooFilter.deserialize(data)
-    return BloomFilter.deserialize_readonly(data)
-
-
-def _cached_probe_filter(data: bytes):
-    """Per-worker memo: the broadcast value is the same bytes object across
-    batches, so the zero-copy view is built once per executor. The cache
-    pins ``data`` so the id key can never dangle."""
-    hit = _probe_filter_cache.get(id(data))
-    if hit is None or hit[0] is not data:
-        bf = _deserialize_any(data)
-        _probe_filter_cache.clear()  # hold at most one filter per worker
-        _probe_filter_cache[id(data)] = (data, bf)
-        return bf
-    return hit[1]
-
-
-def probe_bloom(df: DataFrame, bloom, url_col: str = "url_canon", out_col: str = "__maybe_seen") -> DataFrame:
-    """Add a boolean ``out_col``: True when the URL is *possibly* in the
-    filter (no false negatives). Bits ship to executors via broadcast.
-    Accepts either filter class (Bloom or Cuckoo — shared contract:
-    ``contains_hashes(h1, h2)`` / ``serialize``)."""
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast(bloom.serialize())
-
-    @F.pandas_udf("boolean")
-    def _probe(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        bf = _cached_probe_filter(b.value)
-        return pd.Series(bf.contains_hashes(h1.to_numpy(), h2.to_numpy()))
-
-    return (
-        with_url_hashes(df, url_col)
-        .withColumn(out_col, _probe(F.col("__h1"), F.col("__h2")))
-        .drop("__h1", "__h2")
-    )
-
-
 # Max probe-positive rows the exact verify will broadcast; above this it
 # falls back to the shuffled anti-join (deterministic switch on a count
 # over the pinned positives — same pattern as the D2 hybrid). In the
@@ -410,7 +230,6 @@ def _exact_verify_scan_side(
     url_col: str,
     pin,
     max_broadcast_rows: int | None = None,
-    pin_matched: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """``(verified_unseen, dup_seen)`` — the exact-membership backstop
     with NO seen-side shuffle (VERDICT r5 #1; guide §3.1: broadcast the
@@ -453,12 +272,8 @@ def _exact_verify_scan_side(
         dup = positives.join(seen_keys, url_col, "left_semi")
         return verified, dup
     if max_broadcast_rows is None or positives.count() <= max_broadcast_rows:
-        matched = seen_keys.join(F.broadcast(positives.select(F.col(url_col))), url_col, "left_semi")
-        # pin only when BOTH outputs will execute (the epoch loop logs
-        # dup); a single-consumer caller (filter_unseen discards dup)
-        # would pay the cache write for nothing
-        if pin_matched:
-            matched = pin(matched)
+        # pinned: both outputs read it (the epoch loop logs dup)
+        matched = pin(seen_keys.join(F.broadcast(positives.select(F.col(url_col))), url_col, "left_semi"))
         verified = positives.join(F.broadcast(matched), url_col, "left_anti")
         dup = positives.join(F.broadcast(matched), url_col, "left_semi")
     else:
@@ -480,106 +295,6 @@ def _own_pin(owned: list):
     return pin
 
 
-def filter_unseen(
-    frontier: DataFrame,
-    bloom,
-    seen: DataFrame | None,
-    url_col: str = "url_canon",
-    verify_broadcast_max_rows: int | None = VERIFY_BROADCAST_DEFAULT_ROWS,
-) -> DataFrame:
-    """Exact unseen-set with a Bloom prefilter (see module docstring).
-
-    ``seen`` is the exact seen table (one column ``url_canon``); rows
-    flagged possibly-seen are verified exactly against it — via the
-    scan-side broadcast flip (:func:`_exact_verify_scan_side`, no
-    seen-side shuffle); probe-negative rows skip the verify entirely.
-
-    The probed frame is pinned internally so the negatives and
-    positives branches (and any downstream re-consumption of the
-    result) evaluate the Bloom probe ONCE — previously each action over
-    the returned union re-ran the probe per branch (guide §1/§5:
-    the probe is the pipeline's Python-boundary stage; r6 profiling
-    measured it re-executing up to 4× per bench pass). Caches release
-    with the returned handle (``unpersist_when_collected``).
-    """
-    if bloom is None or seen is None:
-        if seen is None:
-            return frontier
-        return frontier.join(seen.select(F.col(url_col)), url_col, "left_anti")
-    from retailer_scrapers_spark.operators.caching import unpersist_when_collected
-
-    owned: list[DataFrame] = []
-    pin = _own_pin(owned)
-    probed = pin(probe_bloom(frontier, bloom, url_col))
-    negatives = probed.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    positives = probed.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    verified, _dup = _exact_verify_scan_side(
-        positives, seen, url_col, pin,
-        max_broadcast_rows=verify_broadcast_max_rows, pin_matched=False,
-    )
-    return unpersist_when_collected(negatives.unionByName(verified), *owned)
-
-
-def filter_unseen_split(
-    frontier: DataFrame,
-    bloom,
-    seen: DataFrame | None,
-    url_col: str = "url_canon",
-    pin=None,
-    verify_broadcast_max_rows: int | None = VERIFY_BROADCAST_DEFAULT_ROWS,
-) -> tuple[DataFrame, DataFrame]:
-    """``(unseen, dup_seen)`` without re-shuffling the frontier.
-
-    Same semantics as :func:`filter_unseen` plus the complement: the
-    rows that ARE already seen. The complement comes from the Bloom
-    probe's own intermediates — a LEFT SEMI over only the
-    probable-positive rows (≈ true dupes + FP rate, tiny vs the
-    frontier) — instead of the previous ``in_window LEFT ANTI unseen``,
-    which re-shuffled the whole frontier on ``url_canon`` once per
-    epoch purely to log a metric (VERDICT r3 #3). ``pin`` persists the
-    shared probed frame so every branch reads one materialization
-    (omitted → an internal persist released with the result handles).
-    r6 (VERDICT r5 #1): the exact verify is the scan-side broadcast
-    flip — no seen-side shuffle (:func:`_exact_verify_scan_side`).
-    """
-    from retailer_scrapers_spark.operators.caching import unpersist_when_collected
-
-    owned: list[DataFrame] = []
-    if pin is None:
-        pin = _own_pin(owned)
-    if bloom is None or seen is None:
-        if seen is None:
-            return frontier, frontier.limit(0)
-        frontier = pin(frontier)
-        unseen = frontier.join(seen.select(F.col(url_col)), url_col, "left_anti")
-        dup = frontier.join(seen.select(F.col(url_col)), url_col, "left_semi")
-        return unseen, dup
-    # pin the PROBED frame (not just positives): the negatives branch
-    # re-ran the whole probe per consuming action otherwise
-    probed = pin(probe_bloom(frontier, bloom, url_col))
-    negatives = probed.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    positives = probed.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    verified, dup = _exact_verify_scan_side(
-        positives, seen, url_col, pin, max_broadcast_rows=verify_broadcast_max_rows
-    )
-    unseen = negatives.unionByName(verified)
-    if owned:
-        unseen = unpersist_when_collected(unseen, *owned)
-        dup = unpersist_when_collected(dup, *owned)
-    return unseen, dup
-
-
-# ---------------------------------------------------------------------------
-# Slice-routed filter transport (VERDICT r4 #1): the filter lives as a
-# per-slice state DATAFRAME end to end — built distributed
-# (build_bloom_state), merged by slice id executor-side
-# (merge_filter_state), probed by routing each frontier row to its
-# slice's task (probe_filter_state). Nothing O(|filter|) ever touches
-# the driver or a broadcast: at 10^10 URLs / 1e-3 fpp the table is
-# ~17.9 GB — per-slice rows of a few MB each.
-# ---------------------------------------------------------------------------
-
-
 def _probe_slice_blob(
     blob: bytes,
     k_hashes: int,
@@ -591,7 +306,7 @@ def _probe_slice_blob(
     """Probe ONE slice's serialized state against a hash batch whose keys
     all belong to that slice. Dispatch: ``CKF1`` → cuckoo table (probed
     with the shifted-out inner hash); anything else → raw Bloom slice
-    bits. Bloom math mirrors ``BloomFilter._indexes`` slice-locally:
+    bits, indexed as :func:`build_bloom_state` set them:
     local = ((h1 >> shift) + i·(h2|1)) mod m_slice.
 
     ADVICE r5: an unrecognized/mis-sized blob must FAIL, not be probed
@@ -700,11 +415,19 @@ def filter_unseen_split_state(
     n_slices: int | None = None,
     verify_broadcast_max_rows: int | None = VERIFY_BROADCAST_DEFAULT_ROWS,
 ) -> tuple[DataFrame, DataFrame]:
-    """``(unseen, dup_seen)`` with the slice-routed probe — the state-
-    DataFrame counterpart of :func:`filter_unseen_split` (same exactness
-    contract: probe-positive rows verify against the exact seen table,
-    probe-negative rows pass; the complement comes from a LEFT SEMI over
-    only the positives slice).
+    """``(unseen, dup_seen)`` without re-shuffling the frontier: the
+    exact unseen set with the slice-routed Bloom (or cuckoo) prefilter,
+    plus its complement, the rows that ARE already seen.
+
+    Probe-positive rows verify against the exact seen table;
+    probe-negative rows pass. The complement comes from the probe's own
+    intermediates — a LEFT SEMI over only the probable positives (≈ true
+    dupes + FP rate, tiny vs the frontier) — never an ``in_window LEFT
+    ANTI unseen`` re-shuffle of the whole frontier (VERDICT r3 #3).
+    ``state=None`` skips the probe (plain exact anti/semi pair);
+    ``seen=None`` means nothing is seen yet. ``pin`` persists the shared
+    probed frame so every branch reads one materialization (omitted → an
+    internal persist released with the result handles).
 
     r6 (VERDICT r5 #1): the exact verify is the scan-side broadcast
     flip (:func:`_exact_verify_scan_side`) — the seen table is SCANNED,

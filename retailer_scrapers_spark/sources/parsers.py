@@ -67,19 +67,6 @@ def parse_html_products(pages: DataFrame) -> DataFrame:
     )
 
 
-def parse_hidden_json(pages: DataFrame) -> DataFrame:
-    """S2 — the ``.productListJSON`` hidden node (scrape_shoprite.py:249)."""
-    schema = T.StructType(
-        [T.StructField("products", T.ArrayType(T.StructType([
-            T.StructField("sku", T.StringType()), T.StructField("name", T.StringType())])))]
-    )
-    raw = F.regexp_extract("payload", r'<div class="productListJSON"[^>]*>(.*?)</div>', 1)
-    parsed = pages.select("host", "page", F.from_json(raw, schema).alias("pl"))
-    return parsed.select("host", "page", F.posexplode("pl.products")).select(
-        "host", "page", F.col("pos"), F.col("col.sku").alias("sku"), F.col("col.name").alias("name")
-    )
-
-
 # --- Heavy-attrs promo enrichment (S6 second-stage fetch) -------------------
 
 _HEAVY_SCHEMA = T.StructType(

@@ -1,94 +1,24 @@
-"""D6 — partitioned Bloom URL-seen filter: no false negatives, bounded
-fpp, driver merge, and exact unseen-set semantics via the prefilter."""
+"""D6 — partitioned Bloom URL-seen filter, held as per-slice state rows:
+no false negatives, bounded fpp, executor-side merge, and exact
+unseen-set semantics via the prefilter."""
+
+import math
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from retailer_scrapers_spark.operators.bloom import (
-    BloomFilter,
-    build_bloom,
-    filter_unseen,
-    probe_bloom,
+    build_bloom_state,
+    filter_unseen_split_state,
+    merge_filter_state,
+    probe_filter_state,
+    with_url_hashes,
 )
 
 
-def test_no_false_negatives_and_fpp():
-    bf = BloomFilter.for_capacity(10_000, fpp=1e-3)
-    rng = np.random.default_rng(42)
-    h1 = rng.integers(-(2**62), 2**62, 10_000, dtype=np.int64)
-    h2 = rng.integers(-(2**62), 2**62, 10_000, dtype=np.int64)
-    bf.add_hashes(h1, h2)
-    assert bf.contains_hashes(h1, h2).all()  # membership property
-    q1 = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
-    q2 = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
-    fp_rate = bf.contains_hashes(q1, q2).mean()
-    assert fp_rate < 5e-3, fp_rate
+def _urls(spark, prefix: str, n: int):
+    return spark.range(n).select(F.concat(F.lit(prefix), F.col("id").cast("string")).alias("url_canon"))
 
-
-def test_serialize_roundtrip_and_merge():
-    a = BloomFilter(1 << 12, 5)
-    b = BloomFilter(1 << 12, 5)
-    a.add_hashes(np.array([1, 2, 3]), np.array([9, 8, 7]))
-    b.add_hashes(np.array([100]), np.array([200]))
-    rt = BloomFilter.deserialize(a.serialize())
-    assert np.array_equal(rt.bits, a.bits) and rt.k == a.k and rt.n_items == 3
-    a.merge(b)
-    assert a.contains_hashes(np.array([100]), np.array([200]))[0]
-    assert a.n_items == 4
-
-
-def test_build_probe_distributed(spark):
-    urls = [(f"https://h{i % 7}.test/p/{i}",) for i in range(2000)]
-    df = spark.createDataFrame(urls, "url_canon string").repartition(8)
-    bf = build_bloom(df, m_bits=1 << 16, k_hashes=7)
-    assert bf.n_items == 2000
-    probed = probe_bloom(df, bf)
-    assert probed.filter(~F.col("__maybe_seen")).count() == 0  # no false negatives
-    fresh = spark.createDataFrame([(f"https://new.test/{i}",) for i in range(2000)], "url_canon string")
-    fp = probe_bloom(fresh, bf).filter(F.col("__maybe_seen")).count()
-    assert fp < 2000 * 0.02
-
-
-def test_filter_unseen_exact(spark):
-    seen_urls = [(f"https://s.test/{i}",) for i in range(500)]
-    seen = spark.createDataFrame(seen_urls, "url_canon string")
-    bf = build_bloom(seen, m_bits=1 << 14, k_hashes=5)
-    frontier = spark.createDataFrame(
-        seen_urls[:100] + [(f"https://f.test/{i}",) for i in range(300)], "url_canon string"
-    )
-    out = filter_unseen(frontier, bf, seen)
-    got = sorted(r.url_canon for r in out.collect())
-    assert got == sorted(f"https://f.test/{i}" for i in range(300))  # EXACT despite Bloom fpp
-
-
-def test_sliced_build_equivalent_and_state_roundtrip(spark):
-    """Key-space-sliced build (the O(m)-total scale path) has the same
-    membership semantics, and its per-slice checkpoint rows round-trip."""
-    import numpy as np
-
-    from retailer_scrapers_spark.operators.bloom import filter_from_state_rows, filter_state_rows
-
-    urls = spark.createDataFrame([(f"https://h{i % 5}.test/{i}",) for i in range(3000)], "url_canon string")
-    bf = build_bloom(urls, m_bits=1 << 16, k_hashes=7, n_slices=8)
-    assert bf.n_slices == 8 and bf.n_items == 3000
-    assert probe_bloom(urls, bf).filter(~F.col("__maybe_seen")).count() == 0  # no FN
-    fresh = spark.createDataFrame([(f"https://x.test/{i}",) for i in range(3000)], "url_canon string")
-    assert probe_bloom(fresh, bf).filter(F.col("__maybe_seen")).count() < 90
-    rt = filter_from_state_rows(filter_state_rows(bf))
-    assert np.array_equal(rt.bits, bf.bits) and (rt.m_bits, rt.k, rt.n_slices) == (bf.m_bits, bf.k, bf.n_slices)
-
-
-def test_filter_unseen_without_bloom(spark):
-    seen = spark.createDataFrame([("a",)], "url_canon string")
-    frontier = spark.createDataFrame([("a",), ("b",)], "url_canon string")
-    assert [r.url_canon for r in filter_unseen(frontier, None, seen).collect()] == ["b"]
-    assert filter_unseen(frontier, None, None).count() == 2
-
-
-# ---------------------------------------------------------------------------
-# Slice-routed state transport (VERDICT r4 #1): filter state as a per-slice
-# DataFrame — no whole-filter broadcast/collect anywhere in the path.
-# ---------------------------------------------------------------------------
 
 def _bench_urls(spark, n=3000, n_hosts=31):
     return spark.range(n).select(
@@ -100,27 +30,150 @@ def _bench_urls(spark, n=3000, n_hosts=31):
     )
 
 
-def test_state_path_matches_broadcast_path(spark):
-    """The slice-routed probe must be flag-for-flag identical to the
-    driver/broadcast probe — same bits, same hashing, per URL."""
-    from retailer_scrapers_spark.operators.bloom import build_bloom_state, probe_filter_state
+def _positives(df, state, **kw) -> int:
+    return probe_filter_state(df, state, **kw).filter(F.col("__maybe_seen")).count()
 
+
+def _negatives(df, state, **kw) -> int:
+    return probe_filter_state(df, state, **kw).filter(~F.col("__maybe_seen")).count()
+
+
+def _slices(rows) -> dict[int, bytes]:
+    return {r.partition_id: bytes(r.filter_bytes) for r in rows}
+
+
+def test_no_false_negatives_and_fpp(spark):
+    """Members all probe positive; at for-capacity sizing (n = 10^4,
+    p = 1e-3) the fresh-key positive share stays under 5e-3."""
+    n, fpp = 10_000, 1e-3
+    m_bits = int(-n * math.log(fpp) / math.log(2) ** 2)
+    k = round(m_bits / n * math.log(2))
+    members = _urls(spark, "https://m.test/", n)
+    state = spark.createDataFrame(build_bloom_state(members, m_bits=m_bits, k_hashes=k, n_slices=8).collect())
+    assert _negatives(members, state, n_slices=8) == 0  # membership property
+    fresh = _urls(spark, "https://q.test/", 50_000)
+    fp_rate = _positives(fresh, state, n_slices=8) / 50_000
+    assert fp_rate < 5e-3, fp_rate
+
+
+def test_serialize_roundtrip_and_merge(spark):
+    """Per-slice merge is a bytewise OR of equal-geometry states; the
+    merged rows survive a driver round-trip unchanged and still probe."""
+    kw = dict(m_bits=1 << 12, k_hashes=5, n_slices=4)
+    a_urls = spark.createDataFrame([("a1",), ("a2",), ("a3",)], "url_canon string")
+    b_urls = spark.createDataFrame([("b1",)], "url_canon string")
+    a, b = build_bloom_state(a_urls, **kw).collect(), build_bloom_state(b_urls, **kw).collect()
+    merged_rows = merge_filter_state(spark.createDataFrame(a), spark.createDataFrame(b)).collect()
+    rt = spark.createDataFrame(merged_rows)
+    assert _slices(rt.collect()) == _slices(merged_rows)
+    assert sum(r.n_items for r in merged_rows) == 4
+    empty = bytes((1 << 12) // 4 // 8)
+    sa, sb = _slices(a), _slices(b)
+    for sid, blob in _slices(merged_rows).items():
+        want = np.frombuffer(sa.get(sid, empty), np.uint64) | np.frombuffer(sb.get(sid, empty), np.uint64)
+        assert blob == want.tobytes()
+    assert _negatives(a_urls.unionByName(b_urls), rt, n_slices=4) == 0
+
+
+def test_build_probe_distributed(spark):
+    urls = [(f"https://h{i % 7}.test/p/{i}",) for i in range(2000)]
+    df = spark.createDataFrame(urls, "url_canon string").repartition(8)
+    state = spark.createDataFrame(build_bloom_state(df, m_bits=1 << 16, k_hashes=7).collect())
+    assert state.agg(F.sum("n_items")).first()[0] == 2000
+    assert _negatives(df, state) == 0  # no false negatives
+    fresh = spark.createDataFrame([(f"https://new.test/{i}",) for i in range(2000)], "url_canon string")
+    assert _positives(fresh, state) < 2000 * 0.02
+
+
+def test_filter_unseen_exact(spark):
+    seen_urls = [(f"https://s.test/{i}",) for i in range(500)]
+    seen = spark.createDataFrame(seen_urls, "url_canon string")
+    state = build_bloom_state(seen, m_bits=1 << 14, k_hashes=5, n_slices=8)
+    frontier = spark.createDataFrame(
+        seen_urls[:100] + [(f"https://f.test/{i}",) for i in range(300)], "url_canon string"
+    )
+    unseen, dup = filter_unseen_split_state(frontier, state, seen, n_slices=8)
+    got = sorted(r.url_canon for r in unseen.collect())
+    assert got == sorted(f"https://f.test/{i}" for i in range(300))  # EXACT despite Bloom fpp
+    assert sorted(r.url_canon for r in dup.collect()) == sorted(u for (u,) in seen_urls[:100])
+
+
+def test_sliced_build_equivalent_and_state_roundtrip(spark, tmp_path):
+    """Key-space-sliced build (the O(m)-total scale path): one row per
+    slice, no false negatives, fpp bounded — and the per-slice state
+    rows round-trip through a parquet checkpoint byte for byte."""
+    urls = spark.createDataFrame([(f"https://h{i % 5}.test/{i}",) for i in range(3000)], "url_canon string")
+    rows = build_bloom_state(urls, m_bits=1 << 16, k_hashes=7, n_slices=8).collect()
+    assert sorted(r.partition_id for r in rows) == list(range(8))
+    assert {(r.m_bits, r.k_hashes, r.n_slices) for r in rows} == {(1 << 16, 7, 8)}
+    assert sum(r.n_items for r in rows) == 3000
+    spark.createDataFrame(rows).write.parquet(str(tmp_path / "state"))
+    state = spark.read.parquet(str(tmp_path / "state"))
+    assert _slices(state.collect()) == _slices(rows)
+    assert _negatives(urls, state) == 0  # no FN
+    fresh = spark.createDataFrame([(f"https://x.test/{i}",) for i in range(3000)], "url_canon string")
+    assert _positives(fresh, state) < 90
+
+
+def test_filter_unseen_without_bloom(spark):
+    """No filter state: the exact anti/semi pair. Nothing seen yet:
+    every row is unseen and no row is a duplicate."""
+    seen = spark.createDataFrame([("a",)], "url_canon string")
+    frontier = spark.createDataFrame([("a",), ("b",)], "url_canon string")
+    unseen, dup = filter_unseen_split_state(frontier, None, seen)
+    assert [r.url_canon for r in unseen.collect()] == ["b"]
+    assert [r.url_canon for r in dup.collect()] == ["a"]
+    unseen, dup = filter_unseen_split_state(frontier, None, None)
+    assert unseen.count() == 2 and dup.count() == 0
+
+
+def _km_oracle(seen_h, probe_h, m_bits: int, k: int, n_slices: int):
+    """Numpy Kirsch-Mitzenmacher oracle over the ``with_url_hashes``
+    columns: per-slice bit tables built from ``seen_h`` and membership
+    flags for ``probe_h``. slice = h1 & (n-1); local = ((h1 >> shift) +
+    i·(h2|1)) mod m_slice."""
+    m_slice = m_bits // n_slices
+    shift = np.uint64(n_slices.bit_length() - 1)
+
+    def index(h):
+        u1, u2 = h[:, 0].astype(np.uint64), h[:, 1].astype(np.uint64) | np.uint64(1)
+        i = np.arange(k, dtype=np.uint64)[None, :]
+        local = ((u1 >> shift)[:, None] + i * u2[:, None]) % np.uint64(m_slice)
+        return (u1 & np.uint64(n_slices - 1)).astype(np.int64)[:, None] * m_slice + local.astype(np.int64)
+
+    bits = np.zeros(m_bits, dtype=bool)
+    bits[index(seen_h).ravel()] = True
+    words = np.packbits(bits, bitorder="little").view(np.uint64).reshape(n_slices, -1)
+    return words, bits[index(probe_h)].all(axis=1)
+
+
+def test_state_path_matches_km_oracle(spark):
+    """The slice-routed build and probe agree bit-for-bit and
+    flag-for-flag with an independent numpy oracle of the same hashing."""
     urls = _bench_urls(spark)
     seen = urls.filter(F.col("id") % 2 == 0).select("url_canon")
-    state = build_bloom_state(seen, m_bits=1 << 16, k_hashes=7, n_slices=8)
-    bf = build_bloom(seen, m_bits=1 << 16, k_hashes=7, n_slices=8)
-    a = {r.url_canon: r["__maybe_seen"] for r in probe_bloom(urls.select("url_canon"), bf).collect()}
-    b = {r.url_canon: r["__maybe_seen"] for r in probe_filter_state(urls.select("url_canon"), state, n_slices=8).collect()}
-    assert a == b
-    assert sum(b.values()) >= 1500  # every seen URL probes positive (no FN)
+    urls = urls.select("url_canon")
+    m_bits, k, n = 1 << 16, 7, 8
+
+    def hashes(df):
+        rows = with_url_hashes(df).select("url_canon", "__h1", "__h2").collect()
+        return [r.url_canon for r in rows], np.array([(r["__h1"], r["__h2"]) for r in rows], dtype=np.int64)
+
+    _, seen_h = hashes(seen)
+    names, probe_h = hashes(urls)
+    words, flags = _km_oracle(seen_h, probe_h, m_bits, k, n)
+    state = spark.createDataFrame(build_bloom_state(seen, m_bits=m_bits, k_hashes=k, n_slices=n).collect())
+    blobs, zero = _slices(state.collect()), bytes(words.shape[1] * 8)
+    assert [blobs.get(sid, zero) for sid in range(n)] == [w.tobytes() for w in words]
+    got = {r.url_canon: r["__maybe_seen"] for r in probe_filter_state(urls, state, n_slices=n).collect()}
+    assert got == dict(zip(names, flags.tolist()))
+    assert sum(got.values()) >= len(seen_h)  # every seen URL probes positive (no FN)
 
 
 def test_state_probe_no_whole_filter_broadcast(spark):
     """Filter state ≫ one slice: the probe plan must route by slice
     (FlatMapCoGroupsInArrow) with NO broadcast of the filter and no
     driver collect in the build (build returns a lazy DataFrame)."""
-    from retailer_scrapers_spark.operators.bloom import build_bloom_state, probe_filter_state
-
     urls = _bench_urls(spark, n=5000)
     seen = urls.filter(F.col("id") % 2 == 0).select("url_canon")
     state = build_bloom_state(seen, m_bits=1 << 18, k_hashes=7, n_slices=8)
@@ -132,31 +185,24 @@ def test_state_probe_no_whole_filter_broadcast(spark):
     assert "Broadcast" not in plan, plan
 
 
-def test_merge_filter_state_matches_driver_merge(spark):
-    """Executor-side reduce-by-slice OR must equal the driver OR-merge."""
-    from retailer_scrapers_spark.operators.bloom import build_bloom_state, merge_filter_state
-
+def test_merge_filter_state_matches_union_build(spark):
+    """Executor-side reduce-by-slice OR equals building over A ∪ B, byte
+    for byte in every slice, and the per-slice n_items add up."""
     urls = _bench_urls(spark)
     half_a = urls.filter(F.col("id") % 2 == 0).select("url_canon")
     half_b = urls.filter(F.col("id") % 2 == 1).select("url_canon")
     kw = dict(m_bits=1 << 16, k_hashes=7, n_slices=8)
-    merged = merge_filter_state(build_bloom_state(half_a, **kw), build_bloom_state(half_b, **kw))
-    rows = sorted(merged.collect(), key=lambda r: r.partition_id)
-    assert sum(r.n_items for r in rows) == 3000
-    driver = build_bloom(half_a, **kw).merge(build_bloom(half_b, **kw))
-    words = driver.m_slice // 64
-    for r in rows:
-        seg = np.frombuffer(bytes(r.filter_bytes), dtype=np.uint64, count=words)
-        lo = r.partition_id * words
-        assert np.array_equal(seg, driver.bits[lo : lo + words])
+    merged = merge_filter_state(build_bloom_state(half_a, **kw), build_bloom_state(half_b, **kw)).collect()
+    whole = build_bloom_state(half_a.unionByName(half_b), **kw).collect()
+    assert sum(r.n_items for r in merged) == 3000
+    assert {r.partition_id: r.n_items for r in merged} == {r.partition_id: r.n_items for r in whole}
+    assert _slices(merged) == _slices(whole)
 
 
 def test_filter_unseen_split_state_exact(spark):
     """Exactness contract of the state-path split: (unseen, dup) is the
     true membership partition of the frontier — including when the state
     holds MULTIPLE unmerged delta generations per slice (probe ORs)."""
-    from retailer_scrapers_spark.operators.bloom import build_bloom_state, filter_unseen_split_state
-
     urls = _bench_urls(spark, n=2000)
     seen_a = urls.filter(F.col("id") % 4 == 0).select("url_canon")
     seen_b = urls.filter(F.col("id") % 4 == 1).select("url_canon")
@@ -178,8 +224,6 @@ def test_state_probe_survives_long_typed_partition_id(spark):
     reloaded state) must not mis-route cogroup keys — mis-routing makes
     slices meet the wrong rows and produces FALSE NEGATIVES, silently
     breaking seen-set exactness."""
-    from retailer_scrapers_spark.operators.bloom import build_bloom_state, probe_filter_state
-
     urls = _bench_urls(spark, n=2000)
     seen = urls.filter(F.col("id") % 2 == 0).select("url_canon")
     state = build_bloom_state(seen, m_bits=1 << 16, k_hashes=7, n_slices=8)
@@ -200,8 +244,6 @@ def test_exact_verify_has_no_seen_side_exchange(spark):
     hash-partitioning Exchange anywhere in the plan is the probe's own
     slice routing — none keyed on url_canon."""
     import re
-
-    from retailer_scrapers_spark.operators.bloom import build_bloom_state, filter_unseen_split_state
 
     urls = _bench_urls(spark, n=2000)
     seen = urls.filter(F.col("id") % 2 == 0).select("url_canon")
@@ -229,8 +271,6 @@ def test_exact_verify_forced_shuffled_by_negative_guard(spark):
     callers that already know from input metadata that the positives are
     past the broadcast crossover (the scale-adaptive d6 entry at large
     SF). Results must be identical to the flipped shape."""
-    from retailer_scrapers_spark.operators.bloom import build_bloom_state, filter_unseen_split_state
-
     urls = _bench_urls(spark, n=2000)
     seen = urls.filter(F.col("id") % 2 == 0).select("url_canon")
     state = build_bloom_state(seen, m_bits=1 << 16, k_hashes=7, n_slices=8)

@@ -49,37 +49,21 @@ def test_over_capacity_raises():
 
 
 def test_distributed_sliced_build_and_probe(spark):
-    """build_cuckoo (sliced, mapInArrow) feeds the SAME probe/filter_unseen
-    path as the Bloom filter — exact unseen-set either way."""
-    from pyspark.sql import functions as F
-
-    from retailer_scrapers_spark.operators.bloom import filter_unseen, probe_bloom
-    from retailer_scrapers_spark.operators.cuckoo import build_cuckoo
+    """Cuckoo state built by upsert_cuckoo_state feeds the SAME
+    slice-routed probe/verify as the Bloom state — exact unseen set."""
+    from retailer_scrapers_spark.operators.bloom import filter_unseen_split_state
+    from retailer_scrapers_spark.operators.cuckoo import upsert_cuckoo_state
 
     seen_urls = [(f"https://s.test/{i}",) for i in range(2000)]
     seen = spark.createDataFrame(seen_urls, "url_canon string")
-    cf = build_cuckoo(seen, capacity=1 << 13, n_slices=8)
-    assert cf.n_items == 2000
-    assert probe_bloom(seen, cf).filter(~F.col("__maybe_seen")).count() == 0  # no FN
+    state = spark.createDataFrame(upsert_cuckoo_state(None, seen, capacity=1 << 13, n_slices=8).collect())
+    assert state.agg({"n_items": "sum"}).first()[0] == 2000
     frontier = spark.createDataFrame(
         seen_urls[:300] + [(f"https://f.test/{i}",) for i in range(700)], "url_canon string"
     )
-    out = sorted(r.url_canon for r in filter_unseen(frontier, cf, seen).collect())
-    assert out == sorted(f"https://f.test/{i}" for i in range(700))
-
-
-def test_insert_overflow_raises_runtimeerror_on_driver(spark):
-    """ADVICE r2: a slice overflowing inside the Arrow task surfaces on
-    the driver as the documented RuntimeError (not a raw PythonException),
-    so the epoch loop's rebuild fallback can catch it."""
-    from retailer_scrapers_spark.operators.cuckoo import build_cuckoo, insert_into_cuckoo
-
-    small = build_cuckoo(
-        spark.createDataFrame([("https://h.test/x",)], "url_canon string"), capacity=64, n_slices=2
-    )
-    flood = spark.createDataFrame([(f"https://h.test/f/{i}",) for i in range(500)], "url_canon string")
-    with pytest.raises(RuntimeError, match="over capacity"):
-        insert_into_cuckoo(small, flood)
+    unseen, dup = filter_unseen_split_state(frontier, state, seen, n_slices=8)
+    assert sorted(r.url_canon for r in unseen.collect()) == sorted(f"https://f.test/{i}" for i in range(700))
+    assert sorted(r.url_canon for r in dup.collect()) == sorted(u for (u,) in seen_urls[:300])
 
 
 def test_epoch_loop_rebuilds_on_slice_overflow(spark, site_df, robots_df, seeds_df, monkeypatch, tmp_path_factory):
@@ -107,30 +91,6 @@ def test_epoch_loop_rebuilds_on_slice_overflow(spark, site_df, robots_df, seeds_
     plan.run(seeds_df, epochs=3)  # must not raise
     assert calls["n"] >= 1  # the insert path was attempted and failed over
     assert plan.catalog.latest_epoch("frontier") == 2
-
-
-def test_insert_into_cuckoo_delta(spark):
-    """VERDICT r1 #5: per-epoch delta insert instead of full rebuild —
-    inserted keys become members (no false negatives), untouched slices
-    are reused, and the filter round-trips through serialization."""
-    from pyspark.sql import functions as F
-
-    from retailer_scrapers_spark.operators.bloom import with_url_hashes
-    from retailer_scrapers_spark.operators.cuckoo import SlicedCuckoo, build_cuckoo, insert_into_cuckoo
-
-    a = spark.createDataFrame([(f"https://h.test/a/{i}",) for i in range(300)], "url_canon string")
-    b = spark.createDataFrame([(f"https://h.test/b/{i}",) for i in range(200)], "url_canon string")
-    base = build_cuckoo(a, capacity=4096, n_slices=4)
-    n0 = base.n_items
-    updated = insert_into_cuckoo(base, b)
-    assert updated.n_items == n0 + 200
-    hashes = [r[0] for r in with_url_hashes(a.unionByName(b), "url_canon").select(F.col("__h1")).collect()]
-    import numpy as np
-
-    assert updated.contains_hashes(np.array(hashes, dtype=np.int64)).all()
-    back = SlicedCuckoo.deserialize(updated.serialize())
-    assert back.contains_hashes(np.array(hashes, dtype=np.int64)).all()
-    assert back.n_items == updated.n_items
 
 
 def test_upsert_cuckoo_state_build_and_delta(spark):

@@ -46,13 +46,14 @@ def test_empty_dataframe_through_operators(spark):
 
 
 def test_bloom_empty_build(spark):
-    from retailer_scrapers_spark.operators.bloom import build_bloom, filter_unseen
+    from retailer_scrapers_spark.operators.bloom import build_bloom_state, filter_unseen_split_state
 
     empty = spark.createDataFrame([], "url_canon string")
-    bf = build_bloom(empty, m_bits=1 << 10, k_hashes=3)
-    assert bf.n_items == 0
+    state = build_bloom_state(empty, m_bits=1 << 10, k_hashes=3)
+    assert state.count() == 0
     frontier = spark.createDataFrame([("https://a.test/1",)], "url_canon string")
-    assert filter_unseen(frontier, bf, empty).count() == 1
+    unseen, dup = filter_unseen_split_state(frontier, state, empty)
+    assert unseen.count() == 1 and dup.count() == 0
 
 
 def test_single_row_everything(spark):

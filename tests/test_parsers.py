@@ -43,13 +43,6 @@ def test_html_price_semantics(site_df):
             assert r.promotion_price == "No promo"
 
 
-def test_hidden_json(site_df, site_spec):
-    out = P.parse_hidden_json(site_df.filter(F.col("payload_kind") == "html"))
-    assert out.count() == (site_spec.pages["shoprite.test"] + site_spec.pages["checkers.test"]) * 20
-    r = out.filter((F.col("host") == "shoprite.test") & (F.col("page") == 0) & (F.col("pos") == 3)).collect()[0]
-    assert r.sku == G.product_at("shoprite.test", 0, 3)["image_id"]
-
-
 def test_heavy_attrs_parse(site_df):
     out = P.parse_heavy_attrs(site_df.filter(F.col("payload_kind") == "json_heavy_attrs"))
     rows = out.filter((F.col("host") == "shoprite.test") & (F.col("page") == 0)).collect()
