@@ -7,7 +7,7 @@ the frontier DataFrame.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 MAX_ATTEMPTS = 3  # page retry budget (scrape_shoprite.py:222,387-394)
@@ -82,6 +82,51 @@ def salt_hot_hosts(
     )
 
 
+def fetch_outcome(
+    status_col: str = "status",
+    attempt_col: str = "attempt",
+    max_attempts: int = MAX_ATTEMPTS,
+    max_attempts_col: str | None = None,
+) -> Column:
+    """R4 — a fetch's fate, the one definition of the retry cap rule:
+    ``ok`` (status < 500 or none), ``retry`` (failed with attempt+1 <
+    cap) or ``dropped`` (failed at the cap).
+
+    Per-host budgets (VERDICT r2 #8): the reference retries pages 3×
+    for Shoprite/PnP but WITHOUT LIMIT for Woolworths
+    (scrape_woolworths.py:80-111). ``max_attempts_col`` names an int
+    column (joined from robots/config) overriding the scalar cap per
+    row; NULL falls back to ``max_attempts``, and a NEGATIVE cap means
+    retry forever (the Woolworths semantics).
+    """
+    cap = F.lit(max_attempts)
+    if max_attempts_col is not None:
+        cap = F.coalesce(F.col(max_attempts_col), cap)
+    status = F.col(status_col)
+    return (
+        F.when((status < 500) | status.isNull(), F.lit("ok"))
+        .when((cap < 0) | (F.col(attempt_col) + 1 < cap), F.lit("retry"))
+        .otherwise(F.lit("dropped"))
+    )
+
+
+def requeue_retries(
+    df: DataFrame, outcome_col: str = "outcome", attempt_col: str = "attempt", priority_col: str = "priority"
+) -> DataFrame:
+    """R4 backoff on the rows labelled ``retry``: ``attempt+1`` and the
+    reference's exponential backoff (sleep(2**retries),
+    scrape_shoprite.py:387-394) re-expressed as a priority penalty of
+    2**(attempt+1) (later epochs = later fetch). Other rows pass as is."""
+    retry = F.col(outcome_col) == "retry"
+    attempt, priority = F.col(attempt_col), F.col(priority_col)
+    return df.withColumns(
+        {
+            attempt_col: F.when(retry, attempt + 1).otherwise(attempt),
+            priority_col: F.when(retry, priority - F.pow(F.lit(2.0), attempt + 1)).otherwise(priority),
+        }
+    )
+
+
 def requeue_failures(
     fetched: DataFrame,
     status_col: str = "status",
@@ -90,39 +135,11 @@ def requeue_failures(
     max_attempts: int = MAX_ATTEMPTS,
     max_attempts_col: str | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """R4 — retry with backoff as dataflow: split fetch results into
-
-    (ok, retry, dropped):
-    - ok:     status < 500
-    - retry:  failed with attempt+1 < cap → re-emitted to the next
-              epoch's frontier with ``attempt+1`` and the reference's
-              exponential backoff (sleep(2**retries),
-              scrape_shoprite.py:387-394) re-expressed as a priority
-              penalty of 2**attempt (later epochs = later fetch).
-    - dropped: failed at the attempt cap.
-
-    Per-host budgets (VERDICT r2 #8): the reference retries pages 3×
-    for Shoprite/PnP but WITHOUT LIMIT for Woolworths
-    (scrape_woolworths.py:80-111). Pass ``max_attempts_col`` naming an
-    int column (joined from robots/config) to override the scalar cap
-    per row; NULL falls back to ``max_attempts``, and a NEGATIVE cap
-    means retry forever (the Woolworths semantics).
-    """
-    cap = (
-        F.coalesce(F.col(max_attempts_col), F.lit(max_attempts))
-        if max_attempts_col is not None
-        else F.lit(max_attempts)
-    )
-    within_cap = (cap < 0) | (F.col(attempt_col) + 1 < cap)
-    failed = fetched.filter(F.col(status_col) >= 500)
-    ok = fetched.filter((F.col(status_col) < 500) | F.col(status_col).isNull())
-    retry = (
-        failed.filter(within_cap)
-        .withColumn(attempt_col, F.col(attempt_col) + 1)
-        .withColumn(priority_col, F.col(priority_col) - F.pow(F.lit(2.0), F.col(attempt_col)))
-    )
-    dropped = failed.filter(~within_cap)
-    return ok, retry, dropped
+    """R4 — retry with backoff as dataflow: ``(ok, retry, dropped)`` by
+    :func:`fetch_outcome`, retries re-prioritised by :func:`requeue_retries`."""
+    fate = fetch_outcome(status_col, attempt_col, max_attempts, max_attempts_col)
+    labelled = requeue_retries(fetched.withColumn("__fate", fate), "__fate", attempt_col, priority_col)
+    return tuple(labelled.filter(F.col("__fate") == f).drop("__fate") for f in ("ok", "retry", "dropped"))
 
 
 def global_sequence(

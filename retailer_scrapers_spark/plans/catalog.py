@@ -3,9 +3,8 @@
 The reference checkpoints by appending CSV per page and copying
 ``products.csv`` to ``backup/products_{ts}.csv`` daily
 (scrape_shoprite.py:382-384, daily_scrape.py:32-44). The engine's
-contract is Iceberg snapshot-per-epoch; this module tries Iceberg and
-falls back to *versioned Parquet with a commit marker* when the
-runtime jars are absent (they are in this sandbox):
+contract is Iceberg snapshot-per-epoch; this module emulates it with
+*versioned Parquet and a commit marker* (no Iceberg runtime needed):
 
     {root}/{table}/epoch={K}/part-*.parquet
     {root}/{table}/epoch={K}/_COMMIT          ← written LAST
@@ -27,21 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 COMMIT_MARKER = "_COMMIT"
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
 class SnapshotCatalog:
     """Versioned-Parquet snapshot store emulating Iceberg epoch snapshots."""
 
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
-        self.iceberg = _iceberg_available(spark)
         os.makedirs(root, exist_ok=True)
 
     # -- paths ---------------------------------------------------------------
@@ -156,23 +146,3 @@ class SnapshotCatalog:
             return None
         with open(os.path.join(self._epoch_dir(table, epoch), COMMIT_MARKER)) as f:
             return json.load(f)
-
-    def append_union(self, df: DataFrame, table: str, epoch: int) -> DataFrame:
-        """K1 append semantics: new snapshot = previous ∪ df (each epoch is
-        one immutable snapshot, like an Iceberg append).
-
-        Idempotent under epoch REPLAY (crash between a staged-table commit
-        and the epoch's frontier commit, then resume re-runs the epoch):
-        the union base is the latest snapshot from a STRICTLY EARLIER
-        epoch, and a re-append to an already-committed epoch is a no-op
-        returning the committed snapshot — the same rows are never
-        appended twice.
-        """
-        committed = self.committed_epochs(table)
-        if epoch in committed:  # replay of a committed epoch → no-op
-            return self.read(table, epoch)
-        prior = [e for e in committed if e < epoch]
-        prev = self.read(table, prior[-1]) if prior else None
-        out = prev.unionByName(df) if prev is not None else df
-        self.write(out, table, epoch)
-        return self.read(table, epoch)

@@ -6,10 +6,17 @@ Per epoch:
   frontier → canonicalize (F8) → robots gate (R3) → visit-window gate
   (R2) → URL-seen prefilter+verify (D6) → host-bucketed top-k (R6) →
   skew salting (R7) → politeness schedule (R1, simulated clock) →
-  fetch (S1/S4/S5/S6 via site join) → retry split (R4) → parse
-  (P1–P3) → stage products/enrichments → discover links → frontier' →
-  checkpoint (R8: frontier, seen, per-slice filter state, fetch log,
-  metrics — each an atomic snapshot).
+  fetch (S1/S4/S5/S6 via site join) labelled with its fate (R4) →
+  parse (P1–P3) → stage products/enrichments → discover links →
+  frontier' → checkpoint (R8: frontier, seen, per-slice filter state,
+  fetch log, metrics — each an atomic snapshot).
+
+Every input frontier row settles exactly once: one ``settled`` frame
+(one union, pinned) holds each row with its ``outcome`` — ok, retry,
+dropped, denied_robots, outside_window, dup_seen, backlog or
+deferred_budget. The metrics events, the seen delta and the rows
+frontier' carries over are filters of it; the fetch log projects the
+labelled fetch it starts from.
 
 ``finalize`` then assembles the reference-compatible products table:
 J1 zip-join enrichment, C2 promo derivation, S7 offer scalar, image
@@ -21,8 +28,9 @@ O2 index assignment, D3 → D2 → D1 dedup in the reference's order
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from retailer_scrapers_spark.functions.prices import NO_PROMO, promo_price
@@ -38,8 +46,10 @@ from retailer_scrapers_spark.operators.dedup import (
     repair_duplicate_indexes,
 )
 from retailer_scrapers_spark.operators.frontier import (
+    fetch_outcome,
     global_sequence,
-    requeue_failures,
+    requeue_failures,  # noqa: F401  (not called here; perfbench/spans.py rebinds it on this module)
+    requeue_retries,
     salt_hot_hosts,
     split_topk_per_host,
 )
@@ -67,6 +77,9 @@ from retailer_scrapers_spark.sources.synthetic_site import BASE_OFFSETS, RETAILE
 
 # D2 repair floors (scrape_shoprite.py:560 etc.): floor = base − 1 per retailer
 REPAIR_FLOORS = {"Checkers": -1, "Pick n Pay": 7499, "Shoprite": 17499, "Woolworths": 28999}
+
+# the frontier table's columns (the `frontier` snapshot schema)
+FRONTIER_COLS = ["url", "url_canon", "host", "priority", "depth", "attempt", "discovered_epoch", "seq"]
 
 
 @dataclass
@@ -139,7 +152,6 @@ class CrawlPlan:
     # -- one epoch ---------------------------------------------------------------
     def run_epoch(self, epoch: int, frontier: DataFrame, seen: DataFrame | None, filter_state: DataFrame | None):
         cfg = self.cfg
-        log_parts = []
         pinned: list[DataFrame] = []
 
         def pin(df: DataFrame) -> DataFrame:
@@ -158,19 +170,16 @@ class CrawlPlan:
             seen = pin(seen)
 
         allowed, denied = robots_filter(frontier, self.robots.select("host", "disallow", "crawl_delay_s"))
-        log_parts.append(denied.select("url_canon", "host", "attempt").withColumn("result", F.lit("denied_robots")))
 
         windows = self.robots.select("host", "visit_start_utc", "visit_end_utc")
         with_window = allowed.join(F.broadcast(windows), "host", "left")
         in_window, deferred_w = visit_window_filter(with_window, cfg.logical_now_s)
         in_window = in_window.drop("visit_start_utc", "visit_end_utc")
-        deferred_w = deferred_w.drop("visit_start_utc", "visit_end_utc", "crawl_delay_s")
-        log_parts.append(deferred_w.select("url_canon", "host", "attempt").withColumn("result", F.lit("outside_window")))
 
-        # D6 metric as an EVENT stream (one aggregation with the others),
-        # not two extra full-pipeline count() actions (VERDICT r1 #5-minor).
-        # dup_seen comes from the Bloom probe's own positives slice — no
-        # frontier-sized anti-join (VERDICT r3 #3). The probe is
+        # D6 metric as a `settled` outcome (one aggregation with the
+        # others), not two extra full-pipeline count() actions (VERDICT r1
+        # #5-minor). dup_seen comes from the Bloom probe's own positives
+        # slice — no frontier-sized anti-join (VERDICT r3 #3). The probe is
         # SLICE-ROUTED (VERDICT r4 #1): the filter stays a per-slice
         # state DataFrame; each frontier row shuffles to its slice's
         # task and is probed against only that slice's few-MB blob — no
@@ -184,12 +193,10 @@ class CrawlPlan:
             # pathological epoch make the positives un-broadcastable
             verify_broadcast_max_rows=VERIFY_BROADCAST_MAX_ROWS,
         )
-        log_parts.append(dup_seen.select("url_canon", "host", "attempt").withColumn("result", F.lit("dup_seen")))
 
         # selected/backlog split on the SAME window rank — one shuffle,
         # no complement anti-join over the unseen set (VERDICT r3 #2)
         selected, backlog = split_topk_per_host(unseen, cfg.per_host_budget, pin=pin)
-        backlog = backlog.drop("crawl_delay_s")
 
         salted = salt_hot_hosts(selected, cfg.target_rows_per_task)
         if cfg.politeness_mode == "continuous":
@@ -198,10 +205,7 @@ class CrawlPlan:
                 salted = salted.join(F.broadcast(state), ["host", "salt"], "left")
         sched = pin(politeness_schedule(salted, cfg.epoch_budget_s, default_delay_s=cfg.default_delay_s))
         runnable = sched.filter(F.col("within_budget"))
-        overflow = sched.filter(~F.col("within_budget")).drop(
-            "crawl_delay_s", "salt", "n_salt", "scheduled_offset_ms", "wait_ms", "within_budget"
-        )
-        log_parts.append(overflow.select("url_canon", "host", "attempt").withColumn("result", F.lit("deferred_budget")))
+        overflow = sched.filter(~F.col("within_budget"))
 
         if cfg.politeness_mode == "continuous":
             # persist each (host, salt)'s owed wait for the next epoch:
@@ -234,32 +238,17 @@ class CrawlPlan:
                 cur_state = cur_state.unionByName(decayed)
             self.catalog.write(cur_state.filter(F.col("carry_ms") > 0), "sched_state", epoch)
 
-        fetched = pin(stamp_fetch_seq(fetch_pages(runnable, self.site)))
-        # R4 with per-host budgets: an optional robots `max_attempts`
-        # column overrides the scalar cap (reference: 3× for
-        # Shoprite/PnP, unlimited for Woolworths — scrape_woolworths.py:80-111)
-        from retailer_scrapers_spark.operators.frontier import MAX_ATTEMPTS
-
+        # R4 fate labelled once on the pinned fetch (the trace label of a
+        # failed fetch is its FATE, not a bare "error"); an optional
+        # robots `max_attempts` column overrides the cap per host
+        # (reference: 3× for Shoprite/PnP, unlimited for Woolworths).
+        fetched = stamp_fetch_seq(fetch_pages(runnable, self.site))
+        cap_col = None
         if "max_attempts" in self.robots.columns:
-            budgets = self.robots.select("host", "max_attempts")
-            fetched_c = fetched.join(F.broadcast(budgets), "host", "left")
-        else:
-            fetched_c = fetched.withColumn("max_attempts", F.lit(None).cast("int"))
-        ok, retry, dropped = requeue_failures(fetched_c, max_attempts_col="max_attempts")
-        ok, retry, dropped = (d.drop("max_attempts") for d in (ok, retry, dropped))
-        # the reference-trace label for a failed fetch is its FATE
-        # ("retry" under the cap, "dropped" at it), not a bare "error"
-        cap = F.coalesce(F.col("max_attempts"), F.lit(MAX_ATTEMPTS))
-        fetch_result = (
-            F.when((F.col("status") < 500) | F.col("status").isNull(), F.lit("ok"))
-            .when((cap < 0) | (F.col("attempt") + 1 < cap), F.lit("retry"))
-            .otherwise(F.lit("dropped"))
-        )
-        log_parts.append(
-            ok.select("url_canon", "host", "attempt").withColumn("result", F.lit("ok"))
-        )
-        log_parts.append(retry.select("url_canon", "host", "attempt").withColumn("result", F.lit("retry")))
-        log_parts.append(dropped.select("url_canon", "host", "attempt").withColumn("result", F.lit("dropped")))
+            fetched = fetched.join(F.broadcast(self.robots.select("host", "max_attempts")), "host", "left")
+            cap_col = "max_attempts"
+        fetched = pin(fetched.withColumn("outcome", fetch_outcome(max_attempts_col=cap_col)))
+        ok = fetched.filter(F.col("outcome") == "ok")
 
         # stage parsed outputs as per-epoch DELTAS (assembled in finalize
         # via read_all): write volume ∝ this epoch's parses, never a
@@ -279,33 +268,56 @@ class CrawlPlan:
         if "json_offer" in kinds:
             self.catalog.write(parse_offer_sentence(ok.filter(F.col("payload_kind") == "json_offer")), "staged_offer", epoch)
 
-        # seen' = seen ∪ attempted-to-completion (ok + dropped); retries stay
-        # unseen. newly_seen ⊆ unseen so the union is disjoint by
+        # `settled`: each input frontier row once, with its `outcome` —
+        # one union, pinned once (retries already carry attempt+1 and the
+        # backoff penalty). Events, the seen delta and the rows frontier'
+        # carries are filters of it, so no later plan re-embeds the fetch
+        # lineage once per branch.
+        branches = ((denied, "denied_robots"), (deferred_w, "outside_window"), (dup_seen, "dup_seen"),
+                    (backlog, "backlog"), (overflow, "deferred_budget"))
+        settled = pin(reduce(DataFrame.unionByName, [
+            requeue_retries(fetched.select(*FRONTIER_COLS, "outcome")),
+            *(df.select(*FRONTIER_COLS, F.lit(o).alias("outcome")) for df, o in branches),
+        ]))
+        outcome = F.col("outcome")
+        # seen' = seen ∪ attempted-to-completion (ok + dropped); retries
+        # stay unseen. newly_seen ⊆ unseen, so the union is disjoint by
         # construction — no re-distinct of the (huge) seen set per epoch.
-        newly_seen = pin(ok.select("url_canon").unionByName(dropped.select("url_canon")).distinct())
-        seen_next = newly_seen if seen is None else seen.select("url_canon").unionByName(newly_seen)
+        newly_seen = pin(settled.filter(outcome.isin("ok", "dropped")).select("url_canon").distinct())
 
-        # frontier' = backlog ∪ window-deferred ∪ budget-overflow ∪ retries ∪ new discoveries
         max_seq = frontier.agg(F.max("seq")).collect()[0][0] or 0
         discovered = pin(canonicalize_urls(discover_links(ok), "url", "url_canon"))
         # novelty check with NO shuffle of the big tables (VERDICT r5 #1,
-        # guide §3.1): seen' ∪ frontier keys are SCANNED and semi-joined
+        # guide §3.1): seen ∪ frontier keys are SCANNED and semi-joined
         # against the broadcast discovered delta; discovered then
-        # anti-joins the (≤ delta-sized) matched set. Above the
-        # broadcast cap the exact shuffled anti-joins remain as the
-        # fallback (deterministic switch on the pinned delta's count —
-        # same pattern as the D2 hybrid and the verify flip).
+        # anti-joins the (≤ delta-sized) matched set. seen ∪ frontier ⊇
+        # seen' (newly_seen ⊆ frontier), without this epoch's fetch in
+        # the plan. Above the broadcast cap the exact shuffled anti-joins
+        # remain as the fallback (deterministic switch on the pinned
+        # delta's count — same pattern as the D2 hybrid and the verify
+        # flip).
         d_keys = discovered.select("url_canon")
         if discovered.count() <= VERIFY_BROADCAST_MAX_ROWS:
-            big_keys = seen_next.select("url_canon").unionByName(frontier.select("url_canon"))
+            big_keys = frontier.select("url_canon")
+            if seen is not None:
+                big_keys = seen.select("url_canon").unionByName(big_keys)
             matched = pin(big_keys.join(F.broadcast(d_keys), "url_canon", "left_semi"))
             discovered = discovered.join(F.broadcast(matched), "url_canon", "left_anti")
         else:  # pathological delta: exact shuffled fallback
-            discovered = discovered.join(seen_next, "url_canon", "left_anti").join(
-                frontier.select("url_canon"), "url_canon", "left_anti"
-            )
+            if seen is not None:
+                discovered = discovered.join(seen.select("url_canon"), "url_canon", "left_anti")
+            discovered = discovered.join(frontier.select("url_canon"), "url_canon", "left_anti")
+        # only `discovered` can self-collide (the same link found on many
+        # pages); the carried rows are one per input frontier row, and
+        # discovered is anti-joined against the whole frontier. Dedup the
+        # DELTA, deterministically (highest priority, then url), instead
+        # of shuffling the entire 10^10-row frontier every epoch
+        # (VERDICT r2 #3).
+        w_dup = Window.partitionBy("url_canon").orderBy(F.col("priority").desc(), F.col("url").asc())
         discovered = (
-            discovered.select(
+            discovered.withColumn("__rn", F.row_number().over(w_dup))
+            .filter(F.col("__rn") == 1)
+            .select(
                 "url",
                 "url_canon",
                 "host",
@@ -315,46 +327,26 @@ class CrawlPlan:
                 F.lit(epoch + 1).alias("discovered_epoch"),
             )
         )
-        # only `discovered` can self-collide (the same link found on many
-        # pages); the other four frontier' inputs are pairwise disjoint by
-        # construction (backlog = unseen∖selected, deferred = outside
-        # window, overflow ⊂ selected∖runnable, retry ⊂ runnable, and
-        # discovered is anti-joined against the whole frontier). Dedup the
-        # DELTA, deterministically (highest priority, then url), instead
-        # of shuffling the entire 10^10-row frontier every epoch
-        # (VERDICT r2 #3).
-        from pyspark.sql import Window
-
-        w_dup = Window.partitionBy("url_canon").orderBy(F.col("priority").desc(), F.col("url").asc())
-        discovered = (
-            discovered.withColumn("__rn", F.row_number().over(w_dup))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
         # seq continues from the frontier's max, stamped by the
         # distributed prefix-sum (no single-partition discovery sort)
         discovered = global_sequence(discovered, "url_canon", "seq", start=max_seq)
-        frontier_cols = ["url", "url_canon", "host", "priority", "depth", "attempt", "discovered_epoch", "seq"]
-        retry_f = retry.select(*frontier_cols)
+        # frontier' = the rows still pending (backlog, window-deferred,
+        # budget overflow, retries) ∪ new discoveries
         frontier_next = (
-            backlog.select(*frontier_cols)
-            .unionByName(deferred_w.select(*frontier_cols))
-            .unionByName(overflow.select(*frontier_cols))
-            .unionByName(retry_f)
+            settled.filter(outcome.isin("backlog", "outside_window", "deferred_budget", "retry"))
+            .select(*FRONTIER_COLS)
             .unionByName(discovered)
         )
 
         # lineage + per-host metrics
-        fetch_log = fetched_c.select(
+        fetch_log = fetched.select(
             "url_canon", "host", F.lit(epoch).alias("epoch"), "fetch_seq", "status",
-            fetch_result.alias("result"),
+            outcome.alias("result"),
             "attempt", F.spark_partition_id().alias("partition_id"), "wait_ms", "scheduled_offset_ms",
         )
         self.catalog.write(fetch_log, "fetch_log", epoch)
-        events = None
-        for part in log_parts:
-            p = part.select("url_canon", "host", "result")
-            events = p if events is None else events.unionByName(p)
+        # every settled row but the untouched backlog is an event
+        events = settled.filter(outcome != "backlog").select("url_canon", "host", outcome.alias("result"))
         metrics = (
             events.groupBy("host", "result").agg(F.count(F.lit(1)).alias("n"))
             .withColumn("epoch", F.lit(epoch))
@@ -390,7 +382,7 @@ class CrawlPlan:
                 # doubled capacity, still fully distributed
                 return upsert_cuckoo_state(
                     None,
-                    seen_next.toDF("url_canon"),
+                    newly_seen if seen is None else seen.select("url_canon").unionByName(newly_seen),
                     capacity=max(cfg.bloom_bits, 2 * (items + n_new)),
                     n_slices=self.n_slices,
                 )

@@ -264,39 +264,43 @@ def discover_links(fetched: DataFrame) -> DataFrame:
     - json_pnp: currentPage+1 while < totalPages (scrape_pnp.py:380-415);
     - json_wool: next offset page while lastRecNum < totalNumRecs
       (scrape_woolworths.py:118-123).
-    Returns (url, priority, depth_parent_host) rows.
+
+    One projection of ``fetched`` — each row's candidate ``(url,
+    priority)`` structs, exploded — not a filtered branch per kind
+    re-unioned. Returns (url, priority) rows.
     """
-    html = fetched.filter(F.col("payload_kind") == "html")
-    next_html = html.select(
-        F.nullif(F.regexp_extract("payload", r'<a class="pagination__next" href="([^"]*)"', 1), F.lit("")).alias("url"),
-        F.lit(1.0).alias("priority"),
-    ).filter(F.col("url").isNotNull())
-    heavy = html.select(
-        F.format_string("https://%s/api/populateProductsWithHeavyAttributes?page=%d", F.col("host"), F.col("page")).alias("url"),
-        F.lit(1.5).alias("priority"),  # enrichment outranks next-page
-    )
-    pnp = (
-        fetched.filter(F.col("payload_kind") == "json_pnp")
-        .select(F.from_json("payload", _PNP_SCHEMA).alias("j"), "host")
-        .select("host", F.col("j.pagination.currentPage").alias("cur"), F.col("j.pagination.totalPages").alias("tot"))
-        .filter(F.col("cur") + 1 < F.col("tot"))
-        .select(
-            F.format_string(
-                "https://%s/pnphybris/v2/pnp-spa/products/search?currentPage=%d&pageSize=72", F.col("host"), F.col("cur") + 1
-            ).alias("url"),
-            F.lit(1.0).alias("priority"),
-        )
-    )
+    kind = F.col("payload_kind")
     wool_inner = F.get(F.get(F.get(F.from_json("payload", _WOOL_SCHEMA).getField("contents"), 0).getField("mainContent"), 0).getField("contents"), 0)
-    wool = (
-        fetched.filter(F.col("payload_kind") == "json_wool")
-        .select("host", "category", "page", wool_inner.getField("totalNumRecs").alias("tot"), wool_inner.getField("lastRecNum").alias("last"))
-        .filter(F.col("last") < F.col("tot"))
-        .select(
+    # staged as columns so each payload is parsed once per row
+    parsed = fetched.select(
+        "host", "page", "category", (kind == "html").alias("__html"),
+        F.when(kind == "html", F.regexp_extract("payload", r'<a class="pagination__next" href="([^"]*)"', 1)).alias("__next"),
+        F.when(kind == "json_pnp", F.from_json("payload", _PNP_SCHEMA).getField("pagination")).alias("__pnp"),
+        F.when(kind == "json_wool", wool_inner).alias("__wool"),
+    )
+
+    def link(cond, url, priority: float):
+        # a null url, never a null struct: `priority` stays non-nullable
+        return F.struct(F.when(cond, url).alias("url"), F.lit(priority).alias("priority"))
+
+    nxt, pnp, wool = F.col("__next"), F.col("__pnp"), F.col("__wool")
+    links = F.array(
+        link(nxt != "", nxt, 1.0),
+        # enrichment outranks next-page
+        link(F.col("__html"), F.format_string("https://%s/api/populateProductsWithHeavyAttributes?page=%d", F.col("host"), F.col("page")), 1.5),
+        link(
+            pnp.getField("currentPage") + 1 < pnp.getField("totalPages"),
+            F.format_string(
+                "https://%s/pnphybris/v2/pnp-spa/products/search?currentPage=%d&pageSize=72", F.col("host"), pnp.getField("currentPage") + 1
+            ),
+            1.0,
+        ),
+        link(
+            wool.getField("lastRecNum") < wool.getField("totalNumRecs"),
             F.format_string(
                 "https://%s/server/searchCategory?category=%s&No=%d&Nrpp=24", F.col("host"), F.col("category"), (F.col("page") + 1) * 24
-            ).alias("url"),
-            F.lit(1.0).alias("priority"),
-        )
+            ),
+            1.0,
+        ),
     )
-    return next_html.unionByName(heavy).unionByName(pnp).unionByName(wool)
+    return parsed.select(F.explode(F.filter(links, lambda c: c.getField("url").isNotNull())).alias("l")).select("l.url", "l.priority")

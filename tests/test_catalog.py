@@ -1,4 +1,4 @@
-"""K5/R8 — snapshot catalog: atomic commits, time travel, append union."""
+"""K5/R8 — snapshot catalog: atomic commits, time travel, delta-append reads."""
 
 import os
 import shutil
@@ -34,30 +34,6 @@ def test_inprogress_dir_cleaned(spark, tmp_path):
     cat.write(spark.range(2).toDF("id"), "t", 0)
     assert not os.path.exists(stale)
     assert cat.read("t").count() == 2
-
-
-def test_append_union(spark, tmp_path):
-    cat = SnapshotCatalog(str(tmp_path), spark)
-    cat.append_union(spark.range(2).toDF("id"), "t", 0)
-    out = cat.append_union(spark.range(2, 5).toDF("id"), "t", 1)
-    assert sorted(r.id for r in out.collect()) == [0, 1, 2, 3, 4]
-    assert cat.read("t", 0).count() == 2  # earlier snapshot untouched
-
-
-def test_append_union_replay_idempotent(spark, tmp_path):
-    """ADVICE r1: a crash between a staged commit and the frontier commit
-    replays the epoch; re-appending to an already-committed epoch must be
-    a no-op, and an append unions from the PREVIOUS epoch, never from the
-    torn one."""
-    cat = SnapshotCatalog(str(tmp_path), spark)
-    cat.append_union(spark.range(2).toDF("id"), "t", 0)
-    cat.append_union(spark.range(2, 5).toDF("id"), "t", 1)
-    # replay epoch 1 (same deterministic rows) → unchanged
-    out = cat.append_union(spark.range(2, 5).toDF("id"), "t", 1)
-    assert sorted(r.id for r in out.collect()) == [0, 1, 2, 3, 4]
-    # next epoch unions from the latest STRICTLY EARLIER epoch
-    out2 = cat.append_union(spark.range(5, 6).toDF("id"), "t", 2)
-    assert sorted(r.id for r in out2.collect()) == [0, 1, 2, 3, 4, 5]
 
 
 def test_compact_merges_deltas_and_reads_transparently(spark, tmp_path):

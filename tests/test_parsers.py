@@ -1,9 +1,12 @@
 """S1–S7 payload parsers over the synthetic web fixtures."""
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from retailer_scrapers_spark.sources import parsers as P
 from retailer_scrapers_spark.sources import synthetic_site as G
+from tests.reference_impl.executor import discover
 
 
 def test_html_parse_counts_and_alignment(site_df, site_spec):
@@ -98,3 +101,7 @@ def test_discover_links(site_df, site_spec):
     assert sum("currentPage" in u for u in urls) == site_spec.pages["pnp.test"] - 1
     # wool: next offset per category until lastRecNum reaches total
     assert sum("searchCategory" in u for u in urls) == len(site_spec.categories) * (site_spec.wool_pages_per_category - 1)
+    # exact parity: the (url, priority) multiset equals the reference
+    # discovery over every site row, so a wrong URL or priority fails
+    want = Counter(link for row in site_df.collect() for link in discover(row.asDict()))
+    assert Counter((r.url, r.priority) for r in links) == want
