@@ -53,13 +53,15 @@ def stamp_fetch_seq(fetched: DataFrame) -> DataFrame:
     rank by (scheduled time, host, seq) — a TOTAL order so golden traces
     reproduce under any parallelism.
 
-    Distributed: the composite key packs into ONE lexicographically
-    faithful string (zero-padded offset ∥ host ∥ '!' ∥ zero-padded seq —
-    '!' sorts below every legal host character, so prefix hosts order
-    exactly like the bare string comparison) and the rank comes from
-    ``global_sequence``'s prefix-block prefix-sum. With this, NO stage
-    of the epoch loop funnels rows through a single-partition sort —
-    not even the (politeness-bounded) per-epoch fetch set.
+    The composite key packs into ONE lexicographically faithful string
+    (zero-padded offset ∥ host ∥ '!' ∥ zero-padded seq — '!' sorts
+    below every legal host character, so prefix hosts order exactly
+    like the bare string comparison) and the rank comes from
+    ``global_sequence``: no single-partition row-level sort of more
+    than its ``block_cap`` rows, so a small fetch set is ranked by one
+    window and returned as one partition. The epoch loop therefore
+    stamps only the fetch log's projection, never the fetched frame
+    the parsers and discovery read.
     """
     from retailer_scrapers_spark.operators.frontier import global_sequence
 

@@ -139,10 +139,17 @@ def _naive_rank(values, start=0):
     return {v: i + 1 + start for i, v in enumerate(sorted(values))}
 
 
+def _both_paths(n):
+    """block_cap values that take each global_sequence path for n rows:
+    the default (one window, n ≤ block_cap) and n − 1 (the prefix-sum)."""
+    return (4_000_000, n - 1)
+
+
 def test_global_sequence_equals_global_window(spark):
     """Identity vs row_number() over a global orderBy, including the
     nasty lexicographic cases: one prefix a proper prefix of another,
-    strings shorter than prefix_len, '.' vs '/' ordering."""
+    strings shorter than prefix_len, '.' vs '/' ordering — on the
+    small-input window path and on the prefix-sum."""
     urls = (
         [f"https://a.com/p{i:04d}?x={i % 7}" for i in range(200)]
         + [f"https://a.com.evil/{i}" for i in range(50)]      # '.' < '/' trap
@@ -152,32 +159,53 @@ def test_global_sequence_equals_global_window(spark):
     assert len(set(urls)) == len(urls)
     df = spark.createDataFrame([(u,) for u in urls], "url_canon string").repartition(13)
     expected = _naive_rank(urls, start=7)
-    for plen, clen in [(40, 12), (8, 3), (1, 1), (500, 40)]:
-        out = FR.global_sequence(df, "url_canon", "seq", start=7, prefix_len=plen, coarse_len=clen)
-        got = {r.url_canon: r.seq for r in out.collect()}
-        assert got == expected, f"prefix_len={plen}"
+    for cap in _both_paths(len(urls)):
+        for plen, clen in [(40, 12), (8, 3), (1, 1), (500, 40)]:
+            out = FR.global_sequence(
+                df, "url_canon", "seq", start=7, prefix_len=plen, coarse_len=clen, block_cap=cap
+            )
+            got = {r.url_canon: r.seq for r in out.collect()}
+            assert got == expected, f"block_cap={cap} prefix_len={plen}"
 
 
 def test_global_sequence_ties_count_correct(spark):
     # duplicate keys: ranks arbitrary among ties but a permutation of 1..n
     df = spark.createDataFrame([("a",), ("a",), ("b",), ("a",)], "url_canon string")
-    seqs = sorted(r.seq for r in FR.global_sequence(df, prefix_len=2, coarse_len=1).collect())
-    assert seqs == [1, 2, 3, 4]
+    for cap in _both_paths(4):
+        seqs = sorted(r.seq for r in FR.global_sequence(df, prefix_len=2, coarse_len=1, block_cap=cap).collect())
+        assert seqs == [1, 2, 3, 4], f"block_cap={cap}"
 
 
 def test_global_sequence_no_row_level_global_sort(spark):
-    """The only unpartitioned window in the plan runs over coarse-prefix
-    BLOCKS, never over the input rows: every row_number (the row-level
-    op) must be partition-scoped."""
+    """Above block_cap rows the only unpartitioned window in the plan
+    runs over coarse-prefix BLOCKS, never over the input rows: every
+    row_number (the row-level op) must be partition-scoped."""
     import re
 
     df = spark.createDataFrame([(f"https://h{i % 5}.test/{i}",) for i in range(100)], "url_canon string")
-    plan = FR.global_sequence(df)._jdf.queryExecution().executedPlan().toString()
+    plan = FR.global_sequence(df, block_cap=60)._jdf.queryExecution().executedPlan().toString()
     for m in re.finditer(r"row_number\(\) windowspecdefinition\(([^,]+),\s*([^,]+),", plan):
         # partitioned spec: first arg is the partition column (__gk), the
         # ordered column comes second; an unpartitioned one starts with
         # 'url_canon ASC' directly
         assert "ASC" not in m.group(1), f"unpartitioned row_number in plan: {m.group(0)}"
+
+
+def test_global_sequence_one_window_up_to_block_cap(spark):
+    """At ≤ block_cap rows the input fits one block, so the rank is ONE
+    unpartitioned row_number window with no join (the offset tables and
+    their two joins are skipped); one row more takes the prefix-sum.
+    The switch sits exactly at block_cap."""
+    n = 50
+    df = spark.createDataFrame([(f"https://h{i % 3}.test/{i}",) for i in range(n)], "url_canon string")
+    expected = _naive_rank([r.url_canon for r in df.collect()], start=3)
+    for cap, one_window in ((n, True), (n - 1, False)):
+        out = FR.global_sequence(df, "url_canon", "seq", start=3, block_cap=cap)
+        assert out.columns == ["url_canon", "seq"]
+        assert {r.url_canon: r.seq for r in out.collect()} == expected, f"block_cap={cap}"
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("Join" not in plan) == one_window, plan
+        assert (plan.count("Window [") == 1) == one_window, plan
 
 
 def test_global_sequence_adaptive_prefix_on_degenerate_input(spark):
@@ -215,9 +243,10 @@ def test_global_sequence_property_random_strings(spark):
     )
     def check(strings, plen):
         df = spark.createDataFrame([(s,) for s in strings], "url_canon string")
-        out = {r.url_canon: r.seq for r in FR.global_sequence(
-            df, "url_canon", "seq", prefix_len=plen, coarse_len=max(plen // 2, 1)
-        ).collect()}
-        assert out == _naive_rank(strings)
+        for cap in _both_paths(len(strings)):
+            out = {r.url_canon: r.seq for r in FR.global_sequence(
+                df, "url_canon", "seq", prefix_len=plen, coarse_len=max(plen // 2, 1), block_cap=cap
+            ).collect()}
+            assert out == _naive_rank(strings), f"block_cap={cap}"
 
     check()

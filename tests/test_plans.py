@@ -257,18 +257,40 @@ def analysed_nodes(df) -> int:
     return n
 
 
+def executed_nodes(df):
+    """Every node of ``df``'s executed physical plan, walked inside the
+    JVM like :func:`analysed_nodes`. Inner children are followed too, so
+    a cached (pinned) frame's own plan is walked where it is read."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        yield node
+        for kids in (node.children(), node.innerChildren()):
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
 def test_frontier_next_exchange_count_bounded(spark, site_df, robots_df, seeds_df, tmp_path_factory):
     """VERDICT r4 #9: pin the shuffle shape of one epoch's frontier'
     plan so a refactor can't silently reintroduce a frontier-sized
-    exchange (the r3 backlog anti-join added one per complement). Plan
-    text re-expands shared subtrees, so the count is an upper BOUND
-    pinned to the current shape, not a node census — any new shuffle in
-    any subtree strictly increases it.
+    exchange (the r3 backlog anti-join added one per complement). The
+    count walks the whole executed plan, planned after the epoch has
+    released its pins so every pinned frame's lineage is inlined: any
+    new shuffle in any subtree strictly increases it.
 
     The same frame's analysed-plan size is pinned too: the post-fetch
     fan-out used to re-embed the fetched lineage in every branch (each
     outcome split, the per-kind discovery union, the novelty check
-    against seen′), and the epoch paid that in driver-side analysis."""
+    against seen′), and global_sequence's offset joins re-embedded the
+    discovered lineage twice more; the epoch paid that in driver-side
+    analysis.
+
+    Parse parallelism: the parsers read the fetched frame, so no
+    single-partition step (the fetch_seq stamp's one-block window) may
+    sit upstream of them. That frame is planned at its write, while the
+    pins are cached (released, the optimizer would prune an unread
+    stamp from the inlined lineage), and checked on epoch 1, whose
+    frontier is read back from its snapshot: epoch 0's pinned seed
+    frontier is itself sequenced by one window."""
     from retailer_scrapers_spark.plans.catalog import SnapshotCatalog
     from retailer_scrapers_spark.plans.crawl import CrawlConfig, CrawlPlan
 
@@ -276,44 +298,50 @@ def test_frontier_next_exchange_count_bounded(spark, site_df, robots_df, seeds_d
     orig_write = SnapshotCatalog.write
 
     def spy_write(self, df, table, epoch, meta=None):
-        captured.setdefault(table, df)
+        captured.setdefault((table, epoch), df)
+        if table == "staged_html":
+            df._jdf.queryExecution().executedPlan()
         return orig_write(self, df, table, epoch, meta)
 
     work = str(tmp_path_factory.mktemp("plan_exchange"))
-    plan = CrawlPlan(spark, CrawlConfig(workdir=work, epochs=1), site_df, robots_df)
+    plan = CrawlPlan(spark, CrawlConfig(workdir=work, epochs=2), site_df, robots_df)
     SnapshotCatalog.write, saved = spy_write, SnapshotCatalog.write
     try:
-        plan.run(seeds_df, epochs=1)
+        plan.run(seeds_df, epochs=2)
     finally:
         SnapshotCatalog.write = saved
-    phys = captured["frontier"]._jdf.queryExecution().executedPlan().toString()
-    n_exchange = phys.count("Exchange")
+    frontier_next = captured[("frontier", 0)]
+    n_exchange = sum("Exchange" in n.nodeName() for n in executed_nodes(frontier_next))
     print(f"frontier' exchanges: {n_exchange}")
     assert n_exchange <= EXPECTED_FRONTIER_EXCHANGES, (
         f"frontier' plan grew to {n_exchange} exchanges "
         f"(pinned ≤ {EXPECTED_FRONTIER_EXCHANGES}) — a new shuffle entered the epoch loop"
     )
-    n_nodes = analysed_nodes(captured["frontier"])
+    n_nodes = analysed_nodes(frontier_next)
     print(f"frontier' analysed nodes: {n_nodes}")
-    assert n_nodes <= FANOUT_FRONTIER_NODES // 3, (
-        f"frontier' analysed plan has {n_nodes} nodes (pinned ≤ {FANOUT_FRONTIER_NODES // 3}) "
-        "— a post-fetch branch re-embeds the fetched lineage again"
+    assert n_nodes <= SEQUENCED_FRONTIER_NODES // 4, (
+        f"frontier' analysed plan has {n_nodes} nodes (pinned ≤ {SEQUENCED_FRONTIER_NODES // 4}) "
+        "— a post-fetch branch or the seq stamp re-embeds a lineage again"
     )
+    staged_html = captured[("staged_html", 1)]
+    for node in executed_nodes(staged_html):
+        name = node.nodeName()
+        assert not (name == "Exchange" and node.outputPartitioning().toString() == "SinglePartition"), (
+            f"single-partition exchange upstream of the parser: {node.simpleString(8)}"
+        )
+        assert not (name == "Window" and node.partitionSpec().isEmpty()), (
+            f"unpartitioned window upstream of the parser: {node.simpleString(8)}"
+        )
 
 
-# measured 64 at this fixture run alone (70 before the outcome frame).
-# The count reads the executed plan's text, which the session caps at
-# spark.sql.maxPlanStringLength (64 KB): cached frames print their
-# cached plans inline, so the text re-expands every pinned subtree and
-# the cap cuts it (the uncapped text counts 662 Exchange mentions, 2,605
-# before). It is therefore an upper BOUND on the first 64 KB — any new
-# shuffle early in the plan moves it; a later test in the same JVM
-# prints longer expression ids and counts fewer. The strings also
-# match BroadcastExchange/ReusedExchange; the per-kind seen-side
-# assertion lives in test_bloom.test_exact_verify_has_no_seen_side_exchange.
-# The size of the whole plan is pinned by the analysed-node bound.
-EXPECTED_FRONTIER_EXCHANGES = 64
-# analysed nodes of the fixture epoch's frontier' before the outcome
-# frame, when each post-fetch branch re-embedded the fetched lineage
-# (5,442 after)
-FANOUT_FRONTIER_NODES = 21_027
+# Exchange, BroadcastExchange and ReusedExchange nodes in the fixture
+# epoch-0 frontier' executed plan, walked in the JVM: 30 with the
+# one-block global_sequence window and the fetch_seq stamp on the fetch
+# log only, 73 while global_sequence joined its offset tables back onto
+# the seed and discovered rows. The plan's text cannot serve: the
+# session's 64 KB spark.sql.maxPlanStringLength truncates it, so a
+# shuffle past the first 64 KB was invisible to a text count.
+EXPECTED_FRONTIER_EXCHANGES = 30
+# analysed nodes of the same frontier' while global_sequence joined its
+# offset tables back onto its input (637 with the one-block window)
+SEQUENCED_FRONTIER_NODES = 5_442
