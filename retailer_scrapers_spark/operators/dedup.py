@@ -101,12 +101,14 @@ def repair_duplicate_indexes(
       just the dupes (the common case — dupes are a minority, and the
       distributed form's ~4 extra shuffles measured 3–4× slower
       locally, VERDICT r4 #3);
-    - larger → ``global_sequence``, the three-level distributed
-      prefix-sum over a lexicographically order-preserving packed key —
+    - larger → ``global_sequence`` at the same ``block_cap`` (so it
+      takes its three-level distributed prefix-sum, never its one-window
+      path) over a lexicographically order-preserving packed key —
       no single-partition window even when ~every row is a duplicate.
       String order columns are \\x00-terminated (field-wise order ==
       concatenated order); integral columns are zero-padded to fixed
-      width (valid for the reference's non-negative ids/prices). Any
+      width (valid for the reference's non-negative ids/prices); a NULL
+      of either kind packs as the empty field, so it sorts first. Any
       other column type falls back to the bounded window.
     """
     from retailer_scrapers_spark.operators.frontier import global_sequence
@@ -136,10 +138,12 @@ def repair_duplicate_indexes(
             if dtypes[c] == "string":
                 parts.append(F.concat(F.coalesce(col, F.lit("")), F.lit("\x00")))
             else:
-                parts.append(F.concat(F.lpad(col.cast("string"), 20, "0"), F.lit("\x00")))
+                # a NULL would null the whole key and drop the row at the
+                # prefix-sum's block join; "" sorts it first, as the window does
+                parts.append(F.concat(F.coalesce(F.lpad(col.cast("string"), 20, "0"), F.lit("")), F.lit("\x00")))
         packed = dupes.withColumn("__ord", F.concat(*parts))
         reassigned = (
-            global_sequence(packed, order_col="__ord", out_col="__seq", start=0)
+            global_sequence(packed, order_col="__ord", out_col="__seq", start=0, block_cap=block_cap)
             .crossJoin(F.broadcast(base))
             .withColumn(id_col, F.col("__seq") + F.col("m"))
             .drop("m", "__ord", "__seq")
