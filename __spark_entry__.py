@@ -148,8 +148,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # crawl epoch loop uses; no whole-filter broadcast or collect.
         from retailer_scrapers_spark.operators.bloom import (
             VERIFY_BROADCAST_DEFAULT_ROWS,
+            _own_pin,
             build_bloom_state,
             filter_unseen_split_state,
+            predicted_fpp,
         )
 
         orders = _t(spark, sf, "orders")
@@ -159,17 +161,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      F.lit(".test/o/"), F.col("o_orderkey").cast("string")).alias("url_canon"),
         )
         seen = urls.filter(F.col("okey") % 3 == 0).select("url_canon")
-        from retailer_scrapers_spark.operators.caching import carry_caches
+        from retailer_scrapers_spark.operators.caching import unpersist_when_collected
 
         # Scale-adaptive sizing from the parquet footers (no Spark job;
         # guide §2: derive scale-dependent settings from input size, not
         # constants). seen is the okey%3==0 third of orders; the filter
         # keeps ~5 bits/item at any SF (the same ratio the old fixed
         # 1<<18 gave sf0.1, so plans at sf<=0.1 are unchanged), and the
-        # verify flips to the count-free shuffled pair once the expected
-        # positives (~|seen|) are past the measured broadcast crossover.
-        # Footers only, so this works for a single file or a directory
-        # dataset as Spark writes it.
+        # verify flips to the count-free shuffled pair once the predicted
+        # positives (the seen rows plus the filter's false positives on
+        # the rest) are past the measured broadcast crossover. Footers
+        # only, so this works for a single file or a directory dataset as
+        # Spark writes it.
         import math as _math
 
         import pyarrow.dataset as _ds
@@ -177,13 +180,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         n_orders = _ds.dataset(f"{sf}/orders.parquet", format="parquet").count_rows()
         seen_est = max(n_orders // 3, 64)
         m_bits = 1 << max(18, _math.ceil(_math.log2(seen_est * 5)))
-        verify_rows = None if seen_est <= VERIFY_BROADCAST_DEFAULT_ROWS else -1
-        state = build_bloom_state(seen, m_bits=m_bits, k_hashes=7, n_slices=8)
+        positives_est = seen_est + predicted_fpp(seen_est, m_bits, 1, 7) * max(n_orders - seen_est, 0)
+        verify_rows = None if positives_est <= VERIFY_BROADCAST_DEFAULT_ROWS else -1
+        held: list = []
+        pin = _own_pin(held)
+        # persisted: the split's state-row read and its probe share one build
+        state = pin(build_bloom_state(seen, m_bits=m_bits, k_hashes=7, n_slices=8))
         unseen, _dup = filter_unseen_split_state(
-            urls.select("url_canon"), state, seen, n_slices=8,
+            urls.select("url_canon"), state, seen, pin=pin, n_slices=8,
             verify_broadcast_max_rows=verify_rows,
         )
-        return carry_caches(unseen.select("url_canon"), unseen)
+        return unpersist_when_collected(unseen.select("url_canon"), *held)
 
     q["d6_seen_filter_anti"] = d6_seen_filter_anti
 

@@ -28,6 +28,13 @@ after the prefilter); probe-negative rows pass directly
 therefore exact (north_rule) while the big anti-join shrinks by
 ~(1 − fpp) at scale.
 
+Cost rule: the probe pays only by keeping rows out of the verify, so
+:func:`filter_unseen_split_state` first reads one state row and predicts
+the fpp its probes would see (:func:`predicted_fpp`). A saturated Bloom
+filter (predicted fpp ≥ :data:`PROBE_BYPASS_FPP`) is skipped: every row
+goes straight to the exact verify, with no slice-routing shuffle and no
+Python stage. The result is the same exact partition.
+
 Sizing: m = −n·ln(p)/ln(2)², k = (m/n)·ln(2). For n = 10^10 and
 p = 1e−3 this is ~17.9 GB of bits cluster-wide — per-slice rows of a
 few MB each, which is why the structure is partitioned and
@@ -36,6 +43,7 @@ checkpointed rather than driver-resident.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -222,6 +230,38 @@ VERIFY_BROADCAST_MAX_ROWS = 8_000_000
 # comparison; mid-scale library use (both sides same order of
 # magnitude) wants the smaller threshold.
 VERIFY_BROADCAST_DEFAULT_ROWS = 200_000
+
+
+# The Bloom probe is a prefilter: it costs a full-frontier shuffle plus
+# one Arrow Python pass and earns that only by keeping rows out of the
+# exact verify. At a predicted fpp of ½ or more, at least half of even
+# the never-seen rows probe positive, so the probe can at most halve the
+# verify; such a filter is skipped and every row goes to the verify.
+PROBE_BYPASS_FPP = 0.5
+
+
+def predicted_fpp(n_items: int, m_bits: int, n_slices: int, k: int) -> float:
+    """False-positive probability of one Bloom slice holding ``n_items``
+    keys in ``m_bits / n_slices`` bits with ``k`` hashes:
+    (1 − e^(−k·n/m_slice))^k. Hash routing makes the slices
+    statistically alike, so one slice's row stands for the whole
+    filter; ``n_slices=1`` gives the whole-filter figure."""
+    m_slice = m_bits / n_slices
+    return (1.0 - math.exp(-k * n_items / m_slice)) ** k
+
+
+def _probe_cannot_pay(row) -> bool:
+    """Whether one state row (``n_slices, n_items, m_bits, k_hashes,
+    magic``) predicts a saturated Bloom filter. A cuckoo table (``CKF1``
+    blob) is never bypassed: its fpp does not grow with load the way a
+    Bloom filter's does. Missing geometry keeps the probe. Several
+    unmerged generations per slice make one row under-count the fill,
+    which also keeps the probe — the safe side."""
+    if bytes(row.magic or b"") == b"CKF1":
+        return False
+    if not (row.n_items is not None and row.m_bits and row.n_slices and row.k_hashes):
+        return False
+    return predicted_fpp(row.n_items, row.m_bits, row.n_slices, row.k_hashes) >= PROBE_BYPASS_FPP
 
 
 def _exact_verify_scan_side(
@@ -434,7 +474,15 @@ def filter_unseen_split_state(
     never shuffled; the only movement is two small broadcasts (the
     positives keys out, the matched subset back). And the PROBED frame
     is pinned (not just positives), so the slice-routed cogroup runs
-    once per epoch instead of once per consuming branch."""
+    once per epoch instead of once per consuming branch.
+
+    Cost rule: one ``head(1)`` reads a state row's geometry (and the
+    slice count, when ``n_slices`` is None). An empty state probes
+    nothing positive, so every row is unseen. A saturated Bloom state
+    (:func:`_probe_cannot_pay`) skips the probe: every row is treated as
+    a positive and goes to the same exact verify — no slice-routing
+    exchange, no Python stage, the same ``(unseen, dup)`` partition
+    (row order aside)."""
     from retailer_scrapers_spark.operators.caching import unpersist_when_collected
 
     owned: list[DataFrame] = []
@@ -447,13 +495,26 @@ def filter_unseen_split_state(
         unseen = frontier.join(seen.select(F.col(url_col)), url_col, "left_anti")
         dup = frontier.join(seen.select(F.col(url_col)), url_col, "left_semi")
         return unseen, dup
-    probed = pin(probe_filter_state(frontier, state, url_col, n_slices=n_slices))
-    negatives = probed.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    positives = probed.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    verified, dup = _exact_verify_scan_side(
-        positives, seen, url_col, pin, max_broadcast_rows=verify_broadcast_max_rows
-    )
-    unseen = negatives.unionByName(verified)
+    head = state.select(
+        "n_slices", "n_items", "m_bits", "k_hashes", F.substring("filter_bytes", 1, 4).alias("magic")
+    ).head(1)
+    if not head:
+        # empty state: nothing can probe positive
+        return frontier, frontier.limit(0)
+    if n_slices is None:
+        n_slices = head[0].n_slices
+    if _probe_cannot_pay(head[0]):
+        unseen, dup = _exact_verify_scan_side(
+            pin(frontier), seen, url_col, pin, max_broadcast_rows=verify_broadcast_max_rows
+        )
+    else:
+        probed = pin(probe_filter_state(frontier, state, url_col, n_slices=n_slices))
+        negatives = probed.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
+        positives = probed.filter(F.col("__maybe_seen")).drop("__maybe_seen")
+        verified, dup = _exact_verify_scan_side(
+            positives, seen, url_col, pin, max_broadcast_rows=verify_broadcast_max_rows
+        )
+        unseen = negatives.unionByName(verified)
     if owned:
         unseen = unpersist_when_collected(unseen, *owned)
         dup = unpersist_when_collected(dup, *owned)

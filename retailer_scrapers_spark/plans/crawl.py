@@ -183,7 +183,9 @@ class CrawlPlan:
         # SLICE-ROUTED (VERDICT r4 #1): the filter stays a per-slice
         # state DataFrame; each frontier row shuffles to its slice's
         # task and is probed against only that slice's few-MB blob — no
-        # whole-filter broadcast (~17.9 GB at 10^10 URLs / 1e-3 fpp).
+        # whole-filter broadcast (~17.9 GB at 10^10 URLs / 1e-3 fpp). A
+        # state whose own fill predicts an fpp ≥ ½ skips the probe and
+        # sends every row to the exact verify (bloom.PROBE_BYPASS_FPP).
         from retailer_scrapers_spark.operators.bloom import VERIFY_BROADCAST_MAX_ROWS
 
         unseen, dup_seen = filter_unseen_split_state(

@@ -323,3 +323,144 @@ def test_state_probe_empty_state_unknown_slicing(spark):
     empty = spark.createDataFrame([], STATE_DDL)
     probed = probe_filter_state(urls.select("url_canon"), empty).collect()
     assert len(probed) == 50 and not any(r["__maybe_seen"] for r in probed)
+
+
+def test_predicted_fpp_hand_values():
+    """(1 − e^(−k·n/m_slice))^k with m_slice = m_bits / n_slices."""
+    from retailer_scrapers_spark.operators.bloom import predicted_fpp
+
+    assert predicted_fpp(0, 1 << 10, 1, 7) == 0.0
+    # k = 1: 1 − e^(−n/m) = 1 − e^(−0.5)
+    assert abs(predicted_fpp(64, 128, 1, 1) - 0.393469) < 1e-6
+    # 2 bits per item, k = 7 (the reseed filter: 32,768 keys per slice,
+    # 2^18 bits over 4 slices): (1 − e^(−3.5))^7
+    assert abs(predicted_fpp(32_768, 1 << 18, 4, 7) - 0.806833) < 1e-6
+    # one slice's row stands for the whole filter
+    assert predicted_fpp(125, 8_000, 8, 5) == predicted_fpp(1_000, 8_000, 1, 5)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _split_sets(unseen, dup):
+    return sorted(r.url_canon for r in unseen.collect()), sorted(r.url_canon for r in dup.collect())
+
+
+def test_saturated_state_skips_probe(spark):
+    """At 2 bits per item and k = 7 the predicted fpp is past the
+    crossover: neither output runs the slice-routed probe (no Arrow
+    cogroup, no ``__slice`` exchange), and the split still equals the
+    truth and the probed split of a roomy filter, which does probe."""
+    from retailer_scrapers_spark.operators.bloom import PROBE_BYPASS_FPP, predicted_fpp
+
+    urls = _bench_urls(spark, n=2000)
+    seen = urls.filter(F.col("id") % 2 == 0).select("url_canon")
+    frontier = urls.select("url_canon")
+    saturated = spark.createDataFrame(build_bloom_state(seen, m_bits=2_000, k_hashes=7, n_slices=8).collect())
+    row = saturated.first()
+    assert predicted_fpp(row.n_items, row.m_bits, row.n_slices, row.k_hashes) >= PROBE_BYPASS_FPP
+    unseen, dup = filter_unseen_split_state(frontier, saturated, seen, n_slices=8)
+    for df in (unseen, dup):
+        assert "FlatMapCoGroupsInArrow" not in _plan(df) and "__slice" not in _plan(df), _plan(df)
+    got = _split_sets(unseen, dup)
+
+    truth = {r.url_canon for r in seen.collect()}
+    assert got == (sorted({r.url_canon for r in frontier.collect()} - truth), sorted(truth))
+    roomy = build_bloom_state(seen, m_bits=1 << 16, k_hashes=7, n_slices=8)
+    r_unseen, r_dup = filter_unseen_split_state(frontier, roomy, seen, n_slices=8)
+    assert "FlatMapCoGroupsInArrow" in _plan(r_unseen), _plan(r_unseen)
+    assert _split_sets(r_unseen, r_dup) == got
+
+
+def test_loaded_cuckoo_state_still_probes(spark):
+    """A cuckoo table at 0.9 load keeps the probe: its fpp does not grow
+    with load the way a Bloom filter's does (its row geometry alone
+    would read as saturated)."""
+    from retailer_scrapers_spark.operators.cuckoo import upsert_cuckoo_state
+
+    urls = _bench_urls(spark, n=8_000)
+    seen = urls.filter(F.col("id") < 7_372).select("url_canon")
+    state = spark.createDataFrame(upsert_cuckoo_state(None, seen, capacity=64, n_slices=1).collect())
+    row = state.first()
+    assert bytes(row.filter_bytes[:4]) == b"CKF1" and row.n_items / row.m_bits >= 0.89
+    unseen, dup = filter_unseen_split_state(urls.select("url_canon"), state, seen, n_slices=1)
+    assert "FlatMapCoGroupsInArrow" in _plan(unseen), _plan(unseen)
+    truth = {r.url_canon for r in seen.collect()}
+    assert _split_sets(unseen, dup) == (
+        sorted({r.url_canon for r in urls.collect()} - truth), sorted(truth)
+    )
+
+
+def test_unmerged_generations_keep_the_probe(spark):
+    """Two unmerged generations, each below the crossover, saturate the
+    filter together. One state row then under-counts the fill and the
+    rule keeps the probe — the safe side — while the merged state skips
+    it. Both give the exact split."""
+    urls = _bench_urls(spark, n=2000)
+    seen_a = urls.filter(F.col("id") % 4 == 0).select("url_canon")
+    seen_b = urls.filter(F.col("id") % 4 == 1).select("url_canon")
+    seen = seen_a.unionByName(seen_b)
+    kw = dict(m_bits=2_048, k_hashes=7, n_slices=8)
+    two_gens = build_bloom_state(seen_a, **kw).unionByName(build_bloom_state(seen_b, **kw))
+    merged = merge_filter_state(build_bloom_state(seen_a, **kw), build_bloom_state(seen_b, **kw))
+    truth = {r.url_canon for r in seen.collect()}
+    want = (sorted({r.url_canon for r in urls.collect()} - truth), sorted(truth))
+    unseen, dup = filter_unseen_split_state(urls.select("url_canon"), two_gens, seen, n_slices=8)
+    assert "FlatMapCoGroupsInArrow" in _plan(unseen), _plan(unseen)
+    assert _split_sets(unseen, dup) == want
+    unseen, dup = filter_unseen_split_state(urls.select("url_canon"), merged, seen, n_slices=8)
+    assert "FlatMapCoGroupsInArrow" not in _plan(unseen), _plan(unseen)
+    assert _split_sets(unseen, dup) == want
+
+
+def _jobs_run(spark, group: str, action) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_unknown_slicing_call_runs_no_extra_job(spark, tmp_path):
+    """Called with ``n_slices=None`` (as the reseed path calls it), the
+    split runs no more Spark jobs than probe + verify composed by hand —
+    the one state-row read replaces the probe's own slice-count lookup —
+    for a roomy state and for a saturated one."""
+    from retailer_scrapers_spark.operators.bloom import (
+        VERIFY_BROADCAST_DEFAULT_ROWS,
+        _exact_verify_scan_side,
+        _own_pin,
+    )
+
+    urls = _bench_urls(spark, n=2000)
+    seen = urls.filter(F.col("id") % 2 == 0).select("url_canon")
+    frontier = urls.select("url_canon")
+    for name, m_bits in (("roomy", 1 << 16), ("saturated", 2_000)):
+        path = str(tmp_path / name)
+        build_bloom_state(seen, m_bits=m_bits, k_hashes=7, n_slices=8).write.parquet(path)
+        state = spark.read.parquet(path)
+        held = []
+        pin = _own_pin(held)
+
+        def composed():
+            probed = pin(probe_filter_state(frontier, state))
+            positives = probed.filter(F.col("__maybe_seen")).drop("__maybe_seen")
+            verified, dup = _exact_verify_scan_side(
+                positives, seen, "url_canon", pin, max_broadcast_rows=VERIFY_BROADCAST_DEFAULT_ROWS
+            )
+            probed.filter(~F.col("__maybe_seen")).drop("__maybe_seen").unionByName(verified).collect()
+            dup.collect()
+
+        def split():
+            unseen, dup = filter_unseen_split_state(frontier, state, seen, pin=pin)
+            unseen.collect()
+            dup.collect()
+
+        n_composed = _jobs_run(spark, f"composed-{name}", composed)
+        n_split = _jobs_run(spark, f"split-{name}", split)
+        for d in held:
+            d.unpersist()
+        assert 0 < n_split <= n_composed, (name, n_split, n_composed)

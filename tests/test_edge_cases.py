@@ -52,8 +52,9 @@ def test_bloom_empty_build(spark):
     state = build_bloom_state(empty, m_bits=1 << 10, k_hashes=3)
     assert state.count() == 0
     frontier = spark.createDataFrame([("https://a.test/1",)], "url_canon string")
-    unseen, dup = filter_unseen_split_state(frontier, state, empty)
-    assert unseen.count() == 1 and dup.count() == 0
+    for n_slices in (None, 8):  # nothing probes positive in an empty filter
+        unseen, dup = filter_unseen_split_state(frontier, state, empty, n_slices=n_slices)
+        assert unseen.count() == 1 and dup.count() == 0
 
 
 def test_single_row_everything(spark):

@@ -81,3 +81,59 @@ def test_large_ordering_exact(large_runs):
             f"engine={engine.iloc[mism[:3]][['epoch', 'fetch_seq', 'url_canon', col]].values}\n"
             f"golden={ref.iloc[mism[:3]][['epoch', 'fetch_seq', 'url_canon', col]].values}"
         )
+
+
+def test_large_saturated_filter_epoch_skips_probe(spark, large_runs, tmp_path_factory, monkeypatch):
+    """The same crawl with a tiny Bloom filter (64 bits, one slice) that
+    saturates by epoch 1: epoch 1 still probes, epoch 2 goes straight to
+    the exact verify. Its first three epochs' fetch trace and seen set
+    equal the reference executor's and the default-filter crawl's."""
+    from retailer_scrapers_spark.operators import bloom
+
+    plan, _ = large_runs
+    site_pdf, seeds_pdf, robots_pdf = G.build_site_pages(LARGE_SPEC), G.build_seeds(LARGE_SPEC), G.build_robots()
+    golden = run_reference(
+        site_pdf.to_dict("records"), robots_pdf.to_dict("records"), seeds_pdf.to_dict("records"),
+        RefConfig(epochs=3, per_host_budget=10),
+    )
+
+    epochs, probed = [], []
+    run_epoch, probe = CrawlPlan.run_epoch, bloom.probe_filter_state
+
+    def tracking_run_epoch(self, epoch, *a, **kw):
+        epochs.append(epoch)
+        return run_epoch(self, epoch, *a, **kw)
+
+    def tracking_probe(*a, **kw):
+        probed.append(epochs[-1])
+        return probe(*a, **kw)
+
+    monkeypatch.setattr(CrawlPlan, "run_epoch", tracking_run_epoch)
+    monkeypatch.setattr(bloom, "probe_filter_state", tracking_probe)
+    cfg = CrawlConfig(
+        workdir=str(tmp_path_factory.mktemp("crawl_large_tiny_bloom")), epochs=3, per_host_budget=10,
+        bloom_bits=64, bloom_slices=1,
+    )
+    tiny = CrawlPlan(spark, cfg, spark.createDataFrame(site_pdf, schemas.SITE_PAGES), spark.createDataFrame(robots_pdf))
+    tiny.run(spark.createDataFrame(seeds_pdf))
+    assert epochs == [0, 1, 2] and probed == [1], probed  # epoch 0 has no filter yet
+
+    def fpp(epoch):
+        row = tiny.catalog.read("seen_filter", epoch).first()
+        return bloom.predicted_fpp(row.n_items, row.m_bits, row.n_slices, row.k_hashes)
+
+    assert fpp(0) < bloom.PROBE_BYPASS_FPP <= fpp(1)
+
+    cols = ["epoch", "fetch_seq", "url_canon", "host", "result", "scheduled_offset_ms", "attempt"]
+
+    def trace(cat):
+        log = pd.concat([cat.read("fetch_log", ep).toPandas() for ep in (0, 1, 2)])
+        return log.sort_values(["epoch", "fetch_seq"])[cols].reset_index(drop=True)
+
+    got = trace(tiny.catalog)
+    ref = pd.DataFrame(golden.trace).sort_values(["epoch", "fetch_seq"])[cols].reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, ref, check_dtype=False)
+    pd.testing.assert_frame_equal(got, trace(plan.catalog))
+    got_seen = {r.url_canon for r in tiny.catalog.read_all("seen").collect()}
+    assert got_seen == golden.seen
+    assert got_seen == {r.url_canon for r in plan.catalog.read_all("seen", max_epoch=2).collect()}
