@@ -3,11 +3,12 @@
 The reference only fixes relative URLs by prepending the site origin
 (scrape_shoprite.py:280-281); the north rule additionally requires
 lowercased host, fragment + tracking-param stripping, and sorted query
-keys. The Spark implementation is 100% built-in column expressions
-(split / filter / array_sort / concat — all codegen'd, no UDF), so it
-runs JVM-side at full scan speed. ``canonicalize_py`` is the
-semantically-identical pure-Python mirror used by the golden-trace
-reference executor; a property test pins the two together.
+keys. The Spark implementation (:func:`canonicalize_urls`) is 100%
+built-in column expressions (split / filter / array_sort / concat — all
+codegen'd, no UDF), so it runs JVM-side at full scan speed.
+``canonicalize_py`` is the semantically-identical pure-Python mirror
+used by the golden-trace reference executor; a property test pins the
+two together.
 
 Grammar handled: ``scheme://authority/path?query#fragment``. Rules:
   1. strip ``#fragment``
@@ -21,7 +22,7 @@ Grammar handled: ``scheme://authority/path?query#fragment``. Rules:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TRACKING_PARAM_RE = r"^(utm_[^=&]*|fbclid|gclid|msclkid|mc_cid|mc_eid|ref)(=|$)"
@@ -30,76 +31,6 @@ TRACKING_PARAM_RE = r"^(utm_[^=&]*|fbclid|gclid|msclkid|mc_cid|mc_eid|ref)(=|$)"
 # One composite pattern splits the URL in a single regex pass:
 #   group 1 = scheme, group 2 = authority, group 3 = path+query (sans fragment)
 URL_SPLIT_RE = r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://([^/?#]*)([^#]*)"
-
-
-def canonicalize_url(url: Column, default_host: Column | str | None = None) -> Column:
-    """Return the canonical form of ``url`` as a Column expression.
-
-    Perf note (two generations, both measured in BENCH): v1 derived
-    scheme/authority/path with ~20 chained regexp ops; v2 used one
-    composite regex with three group extracts — still THREE regex
-    evaluations per row after Catalyst splits the extracts. This form
-    runs ONE anchored ``rlike`` (the validity gate, same grammar as
-    ``URL_SPLIT_RE``) and derives the three parts with pure string ops
-    (instr/substr/substring_index — all whole-stage-codegen'd), which
-    is the cheapest shape for the 10^10-frontier scan. The property
-    test vs ``canonicalize_py`` pins semantic equality.
-    """
-    if default_host is not None:
-        origin = F.concat(F.lit("https://"), default_host if isinstance(default_host, Column) else F.lit(default_host))
-        url = F.when(url.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://"), url).otherwise(
-            F.concat(origin, F.when(url.startswith("/"), url).otherwise(F.concat(F.lit("/"), url)))
-        )
-
-    has_scheme = url.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://")
-    sep = F.instr(url, "://")  # first occurrence == end of the scheme
-    scheme = F.when(has_scheme, F.lower(url.substr(F.lit(1), sep - 1))).otherwise(F.lit(""))
-    # rest = authority + path + query, fragment stripped (the regex's
-    # authority class [^/?#]* and trailing [^#]* both stop at '#')
-    rest = F.substring_index(
-        F.when(has_scheme, url.substr(sep + 3, F.length(url))).otherwise(F.lit("")), "#", 1
-    )
-    # authority: up to the first '/' or '?' (order-independent nesting)
-    authority = F.lower(F.substring_index(F.substring_index(rest, "/", 1), "?", 1))
-    path_q = rest.substr(F.length(authority) + 1, F.length(rest))
-    authority = F.when(scheme == "http", F.regexp_replace(authority, ":80$", "")).otherwise(
-        F.when(scheme == "https", F.regexp_replace(authority, ":443$", "")).otherwise(authority)
-    )
-    path = F.substring_index(path_q, "?", 1)
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    # query = everything after the FIRST '?' (matches the Python mirror)
-    query = F.when(path_q.contains("?"), path_q.substr(F.instr(path_q, "?") + 1, F.length(path_q))).otherwise(F.lit(""))
-
-    # key-based tracking check (== the TRACKING_PARAM_RE semantics, minus
-    # the per-param regex): key = text before the first '='
-    tracked = F.array(*[F.lit(k) for k in ("fbclid", "gclid", "msclkid", "mc_cid", "mc_eid", "ref")])
-    params = F.filter(
-        F.split(query, "&"),
-        lambda p: (p != "")
-        & ~F.array_contains(tracked, F.substring_index(p, "=", 1))
-        & ~F.substring_index(p, "=", 1).startswith("utm_"),
-    )
-    sorted_q = F.array_join(F.array_sort(params), "&")
-    return F.concat(
-        scheme,
-        F.lit("://"),
-        authority,
-        path,
-        F.when(sorted_q != "", F.concat(F.lit("?"), sorted_q)).otherwise(F.lit("")),
-    )
-
-
-def host_of(url_canon: Column) -> Column:
-    """Host (authority sans port) of an already-canonical URL.
-
-    Canonical URLs contain exactly one ``://``, so the scheme strips
-    with ``substring_index(…, "://", -1)`` — pure codegen'd string ops,
-    no per-row regex."""
-    return F.substring_index(
-        F.substring_index(F.substring_index(url_canon, "://", -1), "/", 1),
-        ":",
-        1,
-    )
 
 
 _SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://"
@@ -116,18 +47,17 @@ def canonicalize_urls(
 
     Staged implementation: every intermediate (scheme, authority,
     path+query, …) is a NAMED COLUMN in its own projection, so
-    whole-stage codegen binds it once as a local variable per row. The
-    Column-expression twin (:func:`canonicalize_url`) duplicates each
-    reused subtree when the tree is assembled in Python (a Column reuse
-    copies the subtree), so the same grammar generates several times
-    more code and re-evaluates shared parts per reference. Measured
-    clean A/B (200k URLs, fresh session, codegen pre-warmed): staged
-    first-run 2.5 s / warm 0.16 s vs Column-form 7.5 s / 0.51 s — ~3×
-    on both compile and steady-state. Semantics of both forms are
-    pinned equal to :func:`canonicalize_py` by the property tests.
-    ``host`` falls out of the staged authority for free (no extra regex
-    pass). Nulls in ``url_col`` are the caller's job (same as the
-    Column form).
+    whole-stage codegen binds it once as a local variable per row. A
+    single nested Column expression duplicates each reused subtree when
+    the tree is assembled in Python (a Column reuse copies the subtree),
+    so the same grammar generates several times more code and
+    re-evaluates shared parts per reference. Measured clean A/B (200k
+    URLs, fresh session, codegen pre-warmed): staged first-run 2.5 s /
+    warm 0.16 s vs the nested Column form 7.5 s / 0.51 s — ~3× on both
+    compile and steady-state. Semantics are pinned equal to
+    :func:`canonicalize_py` by the property tests. ``host`` falls out
+    of the staged authority for free (no extra regex pass). Nulls in
+    ``url_col`` are the caller's job.
     """
     u = F.col(url_col)
     if default_host_col:
@@ -228,7 +158,7 @@ _URL_SPLIT_PY = _re.compile(URL_SPLIT_RE)
 
 
 def canonicalize_py(url: str, default_host: str | None = None) -> str:
-    """Pure-Python twin of :func:`canonicalize_url` (identical semantics)."""
+    """Pure-Python twin of :func:`canonicalize_urls` (identical semantics)."""
     if default_host is not None and not _SCHEME_PY.match(url):
         sep = "" if url.startswith("/") else "/"
         url = f"https://{default_host}{sep}{url}"

@@ -10,9 +10,19 @@ contract is Iceberg snapshot-per-epoch; this module emulates it with
     {root}/{table}/epoch={K}/_COMMIT          ← written LAST
 
 A snapshot is visible only once ``_COMMIT`` exists, so a job killed
-mid-write never exposes a torn epoch — the same atomicity Iceberg's
-metadata swap provides. ``latest_epoch`` + ``read`` give time travel;
-resume = read the latest committed epoch (R8).
+mid-write never exposes a torn snapshot — the same atomicity Iceberg's
+metadata swap provides. The data and the marker are written into
+``epoch={K}.inprogress``, which is renamed into place; a snapshot that
+is rewritten is first moved aside to ``epoch={K}.aside`` and deleted
+only after the new one is in place, so a committed copy exists at every
+instant, and a reader puts back an aside copy that a crash left
+without its replacement. ``latest_epoch`` + ``read`` give time travel.
+
+Visibility is per table. A crawl epoch commits several tables and its
+``frontier`` snapshot last, so the frontier commit is the epoch's commit
+point: resume (R8) reads every table as of the latest committed
+frontier epoch, and the replay of an uncommitted epoch rewrites the
+other tables that epoch had already committed.
 """
 
 from __future__ import annotations
@@ -24,6 +34,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 COMMIT_MARKER = "_COMMIT"
+ASIDE = ".aside"
 
 
 class SnapshotCatalog:
@@ -43,26 +54,47 @@ class SnapshotCatalog:
 
     # -- snapshots -----------------------------------------------------------
     def write(self, df: DataFrame, table: str, epoch: int, meta: dict | None = None) -> None:
-        """Write one epoch snapshot atomically (data first, marker last)."""
+        """Write one epoch snapshot atomically (data first, marker last,
+        then one rename publishes both); a snapshot it replaces stays
+        readable until the new one is in place."""
         path = self._epoch_dir(table, epoch)
+        self._restore(path)
         tmp = path + ".inprogress"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-        with open(os.path.join(path, COMMIT_MARKER), "w") as f:
+        with open(os.path.join(tmp, COMMIT_MARKER), "w") as f:
             json.dump({"epoch": epoch, **(meta or {})}, f)
+        if os.path.exists(path):
+            os.rename(path, path + ASIDE)
+        os.rename(tmp, path)
+        shutil.rmtree(path + ASIDE, ignore_errors=True)
+
+    @staticmethod
+    def _restore(path: str) -> None:
+        """Settle a rewrite of ``path`` that a crash interrupted: the aside
+        copy is dropped when its replacement is in place (``path`` only
+        ever appears by renaming a complete snapshot), else renamed back."""
+        aside = path + ASIDE
+        if not os.path.exists(aside):
+            return
+        if os.path.exists(path):
+            shutil.rmtree(aside)
+        else:
+            os.rename(aside, path)
 
     def committed_epochs(self, table: str) -> list[int]:
         tdir = self._table_dir(table)
         if not os.path.isdir(tdir):
             return []
+        for name in os.listdir(tdir):
+            if name.startswith("epoch=") and name.endswith(ASIDE):
+                self._restore(os.path.join(tdir, name[: -len(ASIDE)]))
         out = []
         for name in os.listdir(tdir):
-            if name.startswith("epoch=") and os.path.exists(os.path.join(tdir, name, COMMIT_MARKER)):
-                out.append(int(name.split("=", 1)[1]))
+            epoch = name[len("epoch="):]
+            if name.startswith("epoch=") and epoch.isdigit() and os.path.exists(os.path.join(tdir, name, COMMIT_MARKER)):
+                out.append(int(epoch))
         return sorted(out)
 
     def latest_epoch(self, table: str) -> int | None:
@@ -75,7 +107,9 @@ class SnapshotCatalog:
             epoch = self.latest_epoch(table)
         if epoch is None:
             return None
-        return self.spark.read.parquet(self._epoch_dir(table, epoch))
+        path = self._epoch_dir(table, epoch)
+        self._restore(path)
+        return self.spark.read.parquet(path)
 
     def read_all(self, table: str, max_epoch: int | None = None) -> DataFrame | None:
         """Union of ALL committed epoch snapshots (optionally only those
@@ -144,5 +178,7 @@ class SnapshotCatalog:
             epoch = self.latest_epoch(table)
         if epoch is None:
             return None
-        with open(os.path.join(self._epoch_dir(table, epoch), COMMIT_MARKER)) as f:
+        path = self._epoch_dir(table, epoch)
+        self._restore(path)
+        with open(os.path.join(path, COMMIT_MARKER)) as f:
             return json.load(f)

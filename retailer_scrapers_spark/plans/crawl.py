@@ -8,8 +8,10 @@ Per epoch:
   skew salting (R7) → politeness schedule (R1, simulated clock) →
   fetch (S1/S4/S5/S6 via site join) labelled with its fate (R4) →
   parse (P1–P3) → stage products/enrichments → discover links →
-  frontier' → checkpoint (R8: frontier, seen, per-slice filter state,
-  fetch log, metrics — each an atomic snapshot).
+  frontier' → checkpoint (R8: fetch log, metrics, per-slice filter
+  state, seen, then frontier — each an atomic snapshot; the frontier
+  commit, written last, commits the epoch, and every epoch loads its
+  inputs as of the last committed frontier epoch through ``load_epoch``).
 
 Every input frontier row settles exactly once: one ``settled`` frame
 (one union, pinned) holds each row with its ``outcome`` — ok, retry,
@@ -36,6 +38,8 @@ from pyspark.sql import functions as F
 from retailer_scrapers_spark.functions.prices import NO_PROMO, promo_price
 from retailer_scrapers_spark.functions.urls import canonicalize_urls
 from retailer_scrapers_spark.operators.bloom import (
+    VERIFY_BROADCAST_MAX_ROWS,
+    _exact_verify_scan_side,
     build_bloom_state,
     filter_unseen_split_state,
     merge_filter_state,
@@ -127,30 +131,72 @@ class CrawlPlan:
         from retailer_scrapers_spark.operators.bloom import _next_pow2
 
         self.n_slices = cfg.bloom_slices or _next_pow2(spark.sparkContext.defaultParallelism)
+        # whether self.n_slices is the slicing of the state the next
+        # epoch reads: true once this plan builds a state from the seeds
+        # or has read one back
+        self._n_slices_settled = False
 
-    # -- state bootstrap -------------------------------------------------------
-    def _init_frontier(self, seeds: DataFrame) -> DataFrame:
-        f = canonicalize_urls(seeds, "url", "url_canon")
-        f = f.select(
-            "url",
-            "url_canon",
-            "host",
-            F.coalesce(F.col("priority"), F.lit(1.0)).alias("priority"),
-            F.lit(0).alias("depth"),
-            F.lit(0).alias("attempt"),
-            F.lit(0).alias("discovered_epoch"),
-        )
-        # seq = rank in global url_canon order (no single-partition
-        # row-level sort of more than block_cap rows — VERDICT r1 top item)
-        return global_sequence(f, "url_canon", "seq", start=0)
+    # -- the epoch boundary ------------------------------------------------------
+    def last_committed_epoch(self) -> int | None:
+        """The crawl's commit point: the latest epoch whose ``frontier``
+        snapshot is committed. Each epoch commits ``frontier`` last, so
+        any other table at a later epoch belongs to an epoch that a
+        resume replays and overwrites."""
+        return self.catalog.latest_epoch("frontier")
 
     def resume_epoch(self) -> int:
         """First epoch still to run (0 on a fresh start)."""
-        last = self.catalog.latest_epoch("frontier")
+        last = self.last_committed_epoch()
         return 0 if last is None else last + 1
 
+    def load_epoch(self, epoch: int, seeds: DataFrame):
+        """``(frontier, seen, filter_state, sched_state)``, the inputs of
+        ``epoch``, as of the committed frontier epoch ``epoch − 1``.
+
+        Epoch 0 starts from the seeds with nothing seen. Every later
+        epoch, whether it follows an epoch of this run or a resume,
+        reads the snapshots that epoch ``epoch − 1`` committed before
+        its frontier: the seen deltas through it, its filter state and,
+        in continuous politeness, its scheduler carry. Nothing written
+        by an uncommitted epoch is read, so a replay of that epoch
+        neither counts its own fetches as seen nor re-inserts its keys
+        into the filter."""
+        if epoch == 0:
+            self._n_slices_settled = True
+            f = canonicalize_urls(seeds, "url", "url_canon").select(
+                "url",
+                "url_canon",
+                "host",
+                F.coalesce(F.col("priority"), F.lit(1.0)).alias("priority"),
+                F.lit(0).alias("depth"),
+                F.lit(0).alias("attempt"),
+                F.lit(0).alias("discovered_epoch"),
+            )
+            # seq = rank in global url_canon order (no single-partition
+            # row-level sort of more than block_cap rows — VERDICT r1 top item)
+            return global_sequence(f, "url_canon", "seq", start=0), None, None, None
+        cat, prev = self.catalog, epoch - 1
+        filter_state = cat.read("seen_filter", prev)
+        if not self._n_slices_settled:
+            # hash routing (__slice = h1 & (n_slices−1)) must match the
+            # slicing the state was BUILT with, so a resume on a resized
+            # cluster (another defaultParallelism) cannot mis-route probes
+            head = filter_state.select("n_slices").head(1)
+            if head:
+                self.n_slices = int(head[0][0])
+            self._n_slices_settled = True
+        sched_state = cat.read("sched_state", prev) if self.cfg.politeness_mode == "continuous" else None
+        return cat.read("frontier", prev), cat.read_all("seen", max_epoch=prev), filter_state, sched_state
+
     # -- one epoch ---------------------------------------------------------------
-    def run_epoch(self, epoch: int, frontier: DataFrame, seen: DataFrame | None, filter_state: DataFrame | None):
+    def run_epoch(
+        self,
+        epoch: int,
+        frontier: DataFrame,
+        seen: DataFrame | None,
+        filter_state: DataFrame | None,
+        sched_state: DataFrame | None,
+    ) -> None:
         cfg = self.cfg
         pinned: list[DataFrame] = []
 
@@ -186,8 +232,6 @@ class CrawlPlan:
         # whole-filter broadcast (~17.9 GB at 10^10 URLs / 1e-3 fpp). A
         # state whose own fill predicts an fpp ≥ ½ skips the probe and
         # sends every row to the exact verify (bloom.PROBE_BYPASS_FPP).
-        from retailer_scrapers_spark.operators.bloom import VERIFY_BROADCAST_MAX_ROWS
-
         unseen, dup_seen = filter_unseen_split_state(
             in_window, filter_state, seen, pin=pin, n_slices=self.n_slices,
             # the epoch loop enables the guarded verify: one tiny count
@@ -201,10 +245,8 @@ class CrawlPlan:
         selected, backlog = split_topk_per_host(unseen, cfg.per_host_budget, pin=pin)
 
         salted = salt_hot_hosts(selected, cfg.target_rows_per_task)
-        if cfg.politeness_mode == "continuous":
-            state = self.catalog.read("sched_state", epoch - 1) if epoch > 0 else None
-            if state is not None:
-                salted = salted.join(F.broadcast(state), ["host", "salt"], "left")
+        if sched_state is not None:
+            salted = salted.join(F.broadcast(sched_state), ["host", "salt"], "left")
         sched = pin(politeness_schedule(salted, cfg.epoch_budget_s, default_delay_s=cfg.default_delay_s))
         runnable = sched.filter(F.col("within_budget"))
         overflow = sched.filter(~F.col("within_budget"))
@@ -228,10 +270,9 @@ class CrawlPlan:
                     F.greatest(F.col("__next_free") - budget_ms, F.lit(0)).cast("long").alias("carry_ms"),
                 )
             )
-            prev_state = self.catalog.read("sched_state", epoch - 1) if epoch > 0 else None
-            if prev_state is not None:
+            if sched_state is not None:
                 decayed = (
-                    prev_state.join(cur_state.select("host", "salt"), ["host", "salt"], "left_anti")
+                    sched_state.join(cur_state.select("host", "salt"), ["host", "salt"], "left_anti")
                     .select(
                         "host", "salt",
                         F.greatest(F.col("carry_ms") - budget_ms, F.lit(0)).cast("long").alias("carry_ms"),
@@ -293,25 +334,17 @@ class CrawlPlan:
         max_seq = frontier.agg(F.max("seq")).collect()[0][0] or 0
         discovered = pin(canonicalize_urls(discover_links(ok), "url", "url_canon"))
         # novelty check with NO shuffle of the big tables (VERDICT r5 #1,
-        # guide §3.1): seen ∪ frontier keys are SCANNED and semi-joined
-        # against the broadcast discovered delta; discovered then
-        # anti-joins the (≤ delta-sized) matched set. seen ∪ frontier ⊇
-        # seen' (newly_seen ⊆ frontier), without this epoch's fetch in
-        # the plan. Above the broadcast cap the exact shuffled anti-joins
-        # remain as the fallback (deterministic switch on the pinned
-        # delta's count — same pattern as the D2 hybrid and the verify
-        # flip).
-        d_keys = discovered.select("url_canon")
-        if discovered.count() <= VERIFY_BROADCAST_MAX_ROWS:
-            big_keys = frontier.select("url_canon")
-            if seen is not None:
-                big_keys = seen.select("url_canon").unionByName(big_keys)
-            matched = pin(big_keys.join(F.broadcast(d_keys), "url_canon", "left_semi"))
-            discovered = discovered.join(F.broadcast(matched), "url_canon", "left_anti")
-        else:  # pathological delta: exact shuffled fallback
-            if seen is not None:
-                discovered = discovered.join(seen.select("url_canon"), "url_canon", "left_anti")
-            discovered = discovered.join(frontier.select("url_canon"), "url_canon", "left_anti")
+        # guide §3.1): the shared scan-side verify semi-joins the scanned
+        # seen ∪ frontier keys against the broadcast discovered delta,
+        # with the count-guarded exact shuffled fallback for a
+        # pathological delta. seen ∪ frontier ⊇ seen' (newly_seen ⊆
+        # frontier), without this epoch's fetch in the plan.
+        known = frontier.select("url_canon")
+        if seen is not None:
+            known = seen.select("url_canon").unionByName(known)
+        discovered, _ = _exact_verify_scan_side(
+            discovered, known, "url_canon", pin, max_broadcast_rows=VERIFY_BROADCAST_MAX_ROWS
+        )
         # only `discovered` can self-collide (the same link found on many
         # pages); the carried rows are one per input frontier row, and
         # discovered is anti-joined against the whole frontier. Dedup the
@@ -446,63 +479,28 @@ class CrawlPlan:
         self.catalog.write(frontier_next, "frontier", epoch)
         for df in pinned:
             df.unpersist()
-        # hand the NEXT epoch the materialized snapshots (flat lineage)
-        return (
-            self.catalog.read("frontier", epoch),
-            self.catalog.read_all("seen"),
-            self.catalog.read("seen_filter", epoch),
-        )
 
     # -- full run ---------------------------------------------------------------
     def run(self, seeds: DataFrame, epochs: int | None = None) -> None:
+        """Run epochs from the first uncommitted one (resume, R8) up to
+        ``epochs``, or until the frontier drains."""
         epochs = epochs or self.cfg.epochs
-        start = self.resume_epoch()
-        if start == 0:
-            frontier = self._init_frontier(seeds)
-            seen, filter_state = None, None
-        else:  # resume from checkpoint (R8)
-            last_f = self.catalog.latest_epoch("frontier")
-            frontier = self.catalog.read("frontier", last_f)
-            # union of per-epoch deltas, capped at the frontier's epoch so
-            # a crash between the seen and frontier commits can't make the
-            # replayed epoch treat its own fetches as already seen
-            seen = self.catalog.read_all("seen", max_epoch=last_f)
-            # per-slice filter state resumes AS a DataFrame — no driver
-            # reconstruction. ADVICE r5: cap the filter read at the
-            # frontier's epoch, exactly like `seen`. Reading a torn
-            # commit's epoch-N filter (frontier at N−1) had two hazards:
-            # (a) run_epoch(N) rmtree+renames that same directory
-            # mid-epoch while the final frontier write still holds the
-            # old file scan in its lineage — a recomputed pinned block
-            # (executor loss) would hit deleted part files; (b) in
-            # cuckoo mode the replay re-inserts the same keys,
-            # duplicating fingerprints and inflating capacity pressure.
-            committed = [e for e in self.catalog.committed_epochs("seen_filter") if e <= last_f]
-            filter_state = self.catalog.read("seen_filter", committed[-1]) if committed else None
-            # hash routing (__slice = h1 & (n_slices−1)) must match the
-            # slicing the state was BUILT with: re-derive it from the
-            # checkpoint, so a resume on a resized cluster (different
-            # defaultParallelism ⇒ different dynamic default) can't
-            # mis-route probes into the wrong slice
-            head = filter_state.select("n_slices").head(1) if filter_state is not None else None
-            if head:
-                self.n_slices = int(head[0][0])
-        for epoch in range(start, epochs):
+        for epoch in range(self.resume_epoch(), epochs):
+            frontier, seen, filter_state, sched_state = self.load_epoch(epoch, seeds)
             if frontier.isEmpty():
                 break
-            frontier, seen, filter_state = self.run_epoch(epoch, frontier, seen, filter_state)
+            self.run_epoch(epoch, frontier, seen, filter_state, sched_state)
             if self.cfg.compact_seen_every and (epoch + 1) % self.cfg.compact_seen_every == 0:
                 self.compact_seen()
-                seen = self.catalog.read_all("seen")
 
     def compact_seen(self) -> None:
-        """Merge the seen deltas committed through the frontier's latest
-        epoch into one compacted generation. The frontier bound keeps
-        every possible resume (read_all capped at the frontier epoch)
-        satisfiable after the superseded delta dirs are dropped."""
-        last_f = self.catalog.latest_epoch("frontier")
-        if last_f is not None:
-            self.catalog.compact("seen", through=last_f)
+        """Merge the seen deltas committed through the last committed
+        epoch into one compacted generation. The bound keeps every
+        resume (which reads seen through that epoch) satisfiable after
+        the superseded delta dirs are dropped."""
+        last = self.last_committed_epoch()
+        if last is not None:
+            self.catalog.compact("seen", through=last)
 
     # -- products assembly (reference output parity) ------------------------------
     def finalize(self, corpus: DataFrame, existing: DataFrame | None = None) -> DataFrame:
@@ -613,7 +611,7 @@ class CrawlPlan:
         images_sink = imaged.filter(F.col("bytes").isNotNull() & F.col("phash_ok")).select(
             "image_id", "bytes", "w", "h", "fmt", F.col("caption"), F.col("phash_expected").alias("phash")
         )
-        epoch_for_write = cat.latest_epoch("frontier") or 0
+        epoch_for_write = self.last_committed_epoch() or 0
         # D7 — exists-check against every delta committed BEFORE this
         # epoch (excluding this epoch's own delta keeps finalize-replay
         # idempotent: the re-run recomputes the same delta and overwrites)

@@ -21,6 +21,19 @@ from pyspark.sql import SparkSession
 _ARROW_MAX_RECORDS = "10000"
 _ARROW_MAX_BYTES = "32m"
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: min(48g, 60% of physical RAM).
+
+    Local mode folds executor memory into the one driver JVM, and r6
+    profiling tied the worst per-query outliers to old-gen GC pressure
+    after ~25 queries in one session, hence a large heap where the box
+    has one. A heap sized past the box gets the JVM killed by the OOM
+    killer instead of collected; 60% leaves room for its off-heap
+    memory and the Python workers."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(48 * 1024, int(ram_mb * 0.6))}m"
+
+
 # SparkContext application ids whose Python worker pool has been warmed
 # (get_spark may be called many times per session via getOrCreate)
 _warmed_apps: set[str] = set()
@@ -170,13 +183,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", _ARROW_MAX_RECORDS)
         .config("spark.sql.execution.arrow.maxBytesPerBatch", _ARROW_MAX_BYTES)
-        # 48g (was 24g): local mode folds executor memory into the one
-        # driver JVM, and r6 profiling tied the worst per-query outliers
-        # to old-gen pressure/GC after ~25 queries in one session. The
-        # box budget is 125 GiB; env-overridable, and on a submitted
-        # cluster master the driver JVM already exists so this conf is
-        # inert there (driver memory comes from spark-submit).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # env-overridable; on a submitted cluster master the driver JVM
+        # already exists, so this conf is inert there (driver memory
+        # comes from spark-submit)
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

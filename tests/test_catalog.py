@@ -3,6 +3,8 @@
 import os
 import shutil
 
+import pytest
+
 from retailer_scrapers_spark.plans.catalog import SnapshotCatalog
 
 
@@ -34,6 +36,36 @@ def test_inprogress_dir_cleaned(spark, tmp_path):
     cat.write(spark.range(2).toDF("id"), "t", 0)
     assert not os.path.exists(stale)
     assert cat.read("t").count() == 2
+
+
+def test_rewrite_keeps_a_committed_copy(spark, tmp_path, monkeypatch):
+    """Rewriting a committed epoch moves the old snapshot aside, renames
+    the new one in and only then deletes the old: a crash at the second
+    rename leaves the old rows readable, and the next write succeeds."""
+    from retailer_scrapers_spark.plans import catalog
+
+    cat = SnapshotCatalog(str(tmp_path), spark)
+    cat.write(spark.range(3).toDF("id"), "t", 0)
+    renames = []
+    real_rename = os.rename
+
+    def rename(src, dst):
+        renames.append(dst)
+        if len(renames) == 2:
+            raise OSError("crash before the new snapshot is in place")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(catalog.os, "rename", rename)
+    with pytest.raises(OSError, match="crash"):
+        cat.write(spark.range(7).toDF("id"), "t", 0)
+    monkeypatch.setattr(catalog.os, "rename", real_rename)
+    assert not os.path.exists(str(tmp_path / "t" / "epoch=0"))  # only the aside copy is left
+    fresh = SnapshotCatalog(str(tmp_path), spark)
+    assert fresh.read("t", 0).count() == 3
+    assert fresh.committed_epochs("t") == [0]
+    fresh.write(spark.range(7).toDF("id"), "t", 0)
+    assert fresh.read("t").count() == 7
+    assert sorted(os.listdir(str(tmp_path / "t"))) == ["epoch=0"]
 
 
 def test_compact_merges_deltas_and_reads_transparently(spark, tmp_path):

@@ -120,41 +120,6 @@ def test_resume_matches_uninterrupted(spark, baseline_crawl_10x6, resumed_crawl_
     assert f1.isEmpty() and f2.isEmpty()
 
 
-def test_epoch_replay_does_not_duplicate_staged_rows(
-    spark, site_df, robots_df, seeds_df, baseline_crawl_10x6, tmp_path_factory
-):
-    """ADVICE r1: staged_* tables commit BEFORE the epoch's frontier
-    snapshot; a crash in that window replays the whole epoch on resume.
-    Simulate the torn epoch by deleting epoch-2's post-staging commits
-    (fetch_log … frontier) while keeping the staged commits, then resume:
-    staged tables must match an uninterrupted run row-for-row (the
-    uninterrupted side is the shared ``baseline_crawl_10x6`` fixture —
-    identical config, so a private re-crawl bought nothing)."""
-    import shutil
-
-    w1 = baseline_crawl_10x6
-    w2 = str(tmp_path_factory.mktemp("replay_b"))
-
-    cfg2 = CrawlConfig(workdir=w2, epochs=10, per_host_budget=6)
-    CrawlPlan(spark, cfg2, site_df, robots_df).run(seeds_df, epochs=3)
-    # tear epoch 2: everything written AFTER the staged_* appends vanishes
-    for table in ("fetch_log", "metrics", "seen_filter", "seen", "frontier"):
-        shutil.rmtree(f"{w2}/{table}/epoch=2", ignore_errors=True)
-    plan_b = CrawlPlan(spark, cfg2, site_df, robots_df)
-    assert plan_b.resume_epoch() == 2  # replays the torn epoch
-    plan_b.run(seeds_df, epochs=10)
-
-    cat1, cat2 = SnapshotCatalog(w1, spark), SnapshotCatalog(w2, spark)
-    for table in ("staged_html", "staged_heavy", "staged_pnp", "staged_wool"):
-        t1, t2 = cat1.read_all(table), cat2.read_all(table)
-        if t1 is None:
-            assert t2 is None, table
-            continue
-        rows1 = sorted(map(tuple, t1.collect()))
-        rows2 = sorted(map(tuple, t2.collect()))
-        assert rows1 == rows2, f"{table}: replay changed staged rows"
-
-
 def test_crawl_with_cuckoo_filter_matches_bloom_seen_set(
     spark, site_df, robots_df, seeds_df, crawl_run, tmp_path_factory
 ):
@@ -236,30 +201,107 @@ def test_resume_rederives_slice_count_from_state(
     assert seen1 == seen2
 
 
-def test_torn_filter_commit_replay_does_not_double_insert(
-    spark, site_df, robots_df, seeds_df, tmp_path_factory
-):
-    """ADVICE r5 (medium): on resume after a torn commit (seen_filter
-    epoch N committed, frontier not), the filter must be read at the
-    FRONTIER's epoch — reading the epoch-N filter made the cuckoo
-    replay re-insert epoch-N's keys (duplicated fingerprints, inflated
-    n_items/capacity pressure) and rmtree'd a directory still in the
-    final frontier write's lineage. With the cap, the replayed epoch
-    inserts each key exactly once: Σ n_items == |seen| at the end."""
-    import shutil
+# the tables one crawl epoch writes, in continuous politeness
+EPOCH_TABLES = (
+    "sched_state", "staged_html", "staged_heavy", "staged_pnp", "staged_wool", "staged_offer",
+    "fetch_log", "metrics", "metrics_sketches", "seen_filter", "seen", "frontier",
+)
 
-    work = str(tmp_path_factory.mktemp("torn_filter"))
-    cfg = CrawlConfig(
-        workdir=work, epochs=10, per_host_budget=6, filter_kind="cuckoo", bloom_bits=1 << 14
+
+class _Crash(Exception):
+    pass
+
+
+def test_crash_after_any_write_resumes_to_the_uninterrupted_state(
+    spark, robots_df, seeds_df, tmp_path_factory, monkeypatch
+):
+    """R8 crash-point sweep. Epoch 1 of a continuous-politeness crawl
+    with the cuckoo filter writes every per-epoch table, sched_state and
+    the cuckoo upkeep included. The crawl is aborted after each of those
+    writes in turn, then resumed by a fresh CrawlPlan; every committed
+    table must equal an uninterrupted run's as a multiset (fetch_log
+    without its execution-detail partition_id), and the filter must hold
+    one fingerprint per seen URL — a replay neither duplicates staged
+    rows nor re-inserts its keys."""
+    import shutil
+    from collections import Counter
+
+    from retailer_scrapers_spark import schemas
+
+    # woolworths' category seeds outrank its Daily Difference offer seed,
+    # which outranks the second category pages they link to: the 26 s
+    # window (10 s crawl delay) defers the offer to epoch 1, which
+    # fetches it and one second page, so it writes staged_offer as well
+    # as staged_wool
+    site_df = spark.createDataFrame(G.build_site_pages(G.SiteSpec(wool_pages_per_category=2)), schemas.SITE_PAGES)
+    url = F.col("url")
+    seeds = seeds_df.withColumn(
+        "priority",
+        F.when(url.contains("searchCategory"), F.lit(2.0))
+        .when(url.contains("DailyDifference"), F.lit(1.5))
+        .otherwise(F.col("priority")),
     )
-    CrawlPlan(spark, cfg, site_df, robots_df).run(seeds_df, epochs=3)
-    # tear epoch 2: filter + seen committed, frontier commit lost
-    shutil.rmtree(f"{work}/frontier/epoch=2")
-    plan = CrawlPlan(spark, cfg, site_df, robots_df)
-    assert plan.resume_epoch() == 2
-    plan.run(seeds_df, epochs=10)
-    cat = SnapshotCatalog(work, spark)
-    n_seen = cat.read_all("seen").count()
-    n_items = cat.read("seen_filter").agg(F.sum("n_items")).collect()[0][0]
-    assert n_items == n_seen, f"filter holds {n_items} fingerprints for {n_seen} seen URLs"
-    assert cat.read("frontier").isEmpty()
+
+    def plan(work):
+        cfg = CrawlConfig(
+            workdir=work, epochs=2, per_host_budget=6, filter_kind="cuckoo", bloom_bits=1 << 14,
+            politeness_mode="continuous", epoch_budget_s=26.0,
+        )
+        return CrawlPlan(spark, cfg, site_df, robots_df)
+
+    prefix = str(tmp_path_factory.mktemp("sweep_prefix"))
+    plan(prefix).run(seeds, epochs=1)
+
+    written, crash_after = [], [None]
+    write = SnapshotCatalog.write
+
+    def crashing_write(self, df, table, epoch, meta=None):
+        write(self, df, table, epoch, meta)
+        if epoch == 1:
+            written.append(table)
+            if len(written) == crash_after[0]:
+                raise _Crash(table)
+
+    monkeypatch.setattr(SnapshotCatalog, "write", crashing_write)
+
+    def fork(name):
+        work = str(tmp_path_factory.mktemp(name))
+        shutil.copytree(prefix, work, dirs_exist_ok=True)
+        return work
+
+    base = str(tmp_path_factory.mktemp("sweep_base"))
+    plan(base).run(seeds)  # uninterrupted, from the seeds
+    assert sorted(written) == sorted(EPOCH_TABLES), written
+    order = list(written)
+
+    def rows(cat, table, epoch):
+        df = cat.read(table, epoch)
+        if table == "fetch_log":
+            df = df.drop("partition_id")
+        return Counter(map(tuple, df.select(*sorted(df.columns)).collect()))
+
+    cat_base = SnapshotCatalog(base, spark)
+    want = {
+        (t, e): rows(cat_base, t, e)
+        for t in EPOCH_TABLES if t not in ("seen_filter", "metrics_sketches")
+        for e in cat_base.committed_epochs(t)
+    }
+    for i, table in enumerate(order, start=1):
+        work = fork(f"sweep_{i}")
+        written.clear()
+        crash_after[0] = i
+        with pytest.raises(_Crash, match=table):
+            plan(work).run(seeds)
+        spark.catalog.clearCache()  # the aborted epoch's pins
+        crash_after[0] = None
+        resumed = plan(work)  # a fresh driver
+        assert resumed.resume_epoch() == (2 if table == "frontier" else 1), table
+        resumed.run(seeds)
+        cat = SnapshotCatalog(work, spark)
+        for (t, e), expected in want.items():
+            assert e in cat.committed_epochs(t), (table, t, e)
+            assert rows(cat, t, e) == expected, f"crash after {table}: {t} epoch {e} differs"
+        for t in ("seen_filter", "metrics_sketches"):
+            assert cat.committed_epochs(t) == cat_base.committed_epochs(t), (table, t)
+        n_items = cat.read("seen_filter", 1).agg(F.sum("n_items")).collect()[0][0]
+        assert n_items == cat.read_all("seen").count(), f"crash after {table}: filter items != |seen|"

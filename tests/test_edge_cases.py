@@ -3,7 +3,7 @@ silently change semantics."""
 
 from pyspark.sql import functions as F
 
-from retailer_scrapers_spark.functions.urls import canonicalize_py, canonicalize_url
+from retailer_scrapers_spark.functions.urls import canonicalize_py, canonicalize_urls
 
 
 def test_canonicalize_weird_urls(spark):
@@ -16,7 +16,7 @@ def test_canonicalize_weird_urls(spark):
         "ftp://files.test/x",                # non-http scheme
     ]
     df = spark.createDataFrame([(u,) for u in cases], "url string")
-    got = [r.c for r in df.withColumn("c", canonicalize_url(F.col("url"))).collect()]
+    got = [r.c for r in canonicalize_urls(df, "url", "c").collect()]
     want = [canonicalize_py(u) for u in cases]
     assert got == want
     assert want[0] == "https://h.test/p?a=1"

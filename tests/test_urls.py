@@ -3,14 +3,7 @@
 import random
 import string
 
-from pyspark.sql import functions as F
-
-from retailer_scrapers_spark.functions.urls import (
-    canonicalize_py,
-    canonicalize_url,
-    canonicalize_urls,
-    host_of,
-)
+from retailer_scrapers_spark.functions.urls import canonicalize_py, canonicalize_urls
 
 CASES = {
     "https://SHOP.test/a/b?utm_source=m&z=1&a=2#frag": "https://shop.test/a/b?a=2&z=1",
@@ -31,7 +24,7 @@ def test_python_cases():
 
 def test_spark_matches_python_on_cases(spark):
     df = spark.createDataFrame([(u,) for u in CASES], "url string")
-    got = {r.url: r.canon for r in df.withColumn("canon", canonicalize_url(F.col("url"))).collect()}
+    got = {r.url: r.canon for r in canonicalize_urls(df, "url", "canon").collect()}
     for raw, want in CASES.items():
         assert got[raw] == want, raw
 
@@ -39,11 +32,9 @@ def test_spark_matches_python_on_cases(spark):
 def test_relative_url_prefix_fix(spark):
     # F6 — scrape_shoprite.py:280-281
     df = spark.createDataFrame([("/img/x.png", "shop.test"), ("img/y.png", "shop.test")], "url string, h string")
-    got = [r.c for r in df.withColumn("c", canonicalize_url(F.col("url"), F.col("h"))).collect()]
+    got = [r.c for r in canonicalize_urls(df, "url", "c", default_host_col="h", host_out=None).collect()]
     assert got == ["https://shop.test/img/x.png", "https://shop.test/img/y.png"]
-    assert canonicalize_py("/img/x.png", "shop.test") == "https://shop.test/img/x.png"
-    staged = [r.c for r in canonicalize_urls(df, "url", "c", default_host_col="h", host_out=None).collect()]
-    assert staged == got
+    assert [canonicalize_py(r.url, r.h) for r in df.collect()] == got
 
 
 def test_property_spark_python_parity(spark):
@@ -64,11 +55,7 @@ def test_property_spark_python_parity(spark):
         urls.append(f"{scheme}://{host}{port}{path if path != '/' else rng.choice(['', '/'])}"
                     + (("?" + "&".join(params)) if params else "") + frag)
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = [r.c for r in df.withColumn("c", canonicalize_url(F.col("url"))).collect()]
-    want = [canonicalize_py(u) for u in urls]
-    assert got == want
-    # the STAGED DataFrame form (the hot-path implementation) must match
-    # both the Column form and the python twin — including host
+    # the Spark form must match the python twin — including host
     staged = {r.url: (r.url_canon, r.host) for r in canonicalize_urls(df).collect()}
     for u in urls:
         w = canonicalize_py(u)
@@ -77,9 +64,11 @@ def test_property_spark_python_parity(spark):
 
 
 def test_host_of(spark):
+    """The host column drops the port but the canonical URL keeps a
+    non-default one."""
     df = spark.createDataFrame([("https://a.test:8080/x?q=1",), ("http://b.test/",)], "u string")
-    got = [r.h for r in df.withColumn("h", host_of(F.col("u"))).collect()]
-    assert got == ["a.test", "b.test"]
+    got = [(r.c, r.h) for r in canonicalize_urls(df, "u", "c", host_out="h").collect()]
+    assert got == [("https://a.test:8080/x?q=1", "a.test"), ("http://b.test/", "b.test")]
 
 
 def test_canonicalize_urls_adds_columns(spark):
