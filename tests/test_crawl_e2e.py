@@ -305,3 +305,67 @@ def test_crash_after_any_write_resumes_to_the_uninterrupted_state(
             assert cat.committed_epochs(t) == cat_base.committed_epochs(t), (table, t)
         n_items = cat.read("seen_filter", 1).agg(F.sum("n_items")).collect()[0][0]
         assert n_items == cat.read_all("seen").count(), f"crash after {table}: filter items != |seen|"
+
+
+def test_epoch_replay_does_not_duplicate_staged_rows(
+    spark, site_df, robots_df, seeds_df, baseline_crawl_10x6, tmp_path_factory
+):
+    """staged_* tables commit BEFORE the epoch's frontier snapshot; a
+    crash in that window replays the whole epoch on resume. Tear epoch 2
+    of a default-politeness Bloom crawl by deleting its post-staging
+    commits (fetch_log … frontier) while keeping the staged commits,
+    then resume: staged tables must match an uninterrupted run
+    row-for-row (the shared ``baseline_crawl_10x6`` fixture, identical
+    config). The crash-point sweep covers the continuous/cuckoo path."""
+    import shutil
+
+    w1 = baseline_crawl_10x6
+    w2 = str(tmp_path_factory.mktemp("replay_b"))
+
+    cfg2 = CrawlConfig(workdir=w2, epochs=10, per_host_budget=6)
+    CrawlPlan(spark, cfg2, site_df, robots_df).run(seeds_df, epochs=3)
+    # tear epoch 2: everything written AFTER the staged_* appends vanishes
+    for table in ("fetch_log", "metrics", "seen_filter", "seen", "frontier"):
+        shutil.rmtree(f"{w2}/{table}/epoch=2", ignore_errors=True)
+    plan_b = CrawlPlan(spark, cfg2, site_df, robots_df)
+    assert plan_b.resume_epoch() == 2  # replays the torn epoch
+    plan_b.run(seeds_df, epochs=10)
+
+    cat1, cat2 = SnapshotCatalog(w1, spark), SnapshotCatalog(w2, spark)
+    for table in ("staged_html", "staged_heavy", "staged_pnp", "staged_wool"):
+        t1, t2 = cat1.read_all(table), cat2.read_all(table)
+        if t1 is None:
+            assert t2 is None, table
+            continue
+        rows1 = sorted(map(tuple, t1.collect()))
+        rows2 = sorted(map(tuple, t2.collect()))
+        assert rows1 == rows2, f"{table}: replay changed staged rows"
+
+
+def test_torn_filter_commit_replay_does_not_double_insert(
+    spark, site_df, robots_df, seeds_df, tmp_path_factory
+):
+    """On resume after a torn commit (seen_filter epoch N committed,
+    frontier not), the filter must be read at the FRONTIER's epoch —
+    reading the epoch-N filter would make the cuckoo replay re-insert
+    epoch-N's keys (duplicated fingerprints, inflated n_items). With
+    load_epoch reading seen_filter at epoch − 1, the replayed epoch
+    inserts each key exactly once: Σ n_items == |seen| at the end of a
+    default-politeness crawl torn several epochs before it drains."""
+    import shutil
+
+    work = str(tmp_path_factory.mktemp("torn_filter"))
+    cfg = CrawlConfig(
+        workdir=work, epochs=10, per_host_budget=6, filter_kind="cuckoo", bloom_bits=1 << 14
+    )
+    CrawlPlan(spark, cfg, site_df, robots_df).run(seeds_df, epochs=3)
+    # tear epoch 2: filter + seen committed, frontier commit lost
+    shutil.rmtree(f"{work}/frontier/epoch=2")
+    plan = CrawlPlan(spark, cfg, site_df, robots_df)
+    assert plan.resume_epoch() == 2
+    plan.run(seeds_df, epochs=10)
+    cat = SnapshotCatalog(work, spark)
+    n_seen = cat.read_all("seen").count()
+    n_items = cat.read("seen_filter").agg(F.sum("n_items")).collect()[0][0]
+    assert n_items == n_seen, f"filter holds {n_items} fingerprints for {n_seen} seen URLs"
+    assert cat.read("frontier").isEmpty()
