@@ -891,32 +891,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["global_sequence_rank"] = global_sequence_rank
 
     def hll_distinct_users(spark, sf):
-        # HyperLogLog per-key distinct sketch (distributed build, register
-        # -max merge). Engine-specific registers → rows-only for the
-        # oracle; tests/test_recall_pins.py pins estimates within ±3% of
-        # exact distinct counts.
-        from retailer_scrapers_spark.operators.hll import hll_by_key
-
+        # per-key HyperLogLog distinct sketch (Spark's hll_sketch_agg at
+        # lgK 12; unions merge registers). Engine-specific registers →
+        # rows-only for the oracle; tests/test_recall_pins.py pins
+        # estimates within ±3% of exact distinct counts.
         ev = _t(spark, sf, "events")
-        sk = hll_by_key(ev, "event_type", "user_id", p=12)
-        rows = [(k, float(round(v.estimate(), 3))) for k, v in sorted(sk.items())]
-        return spark.createDataFrame(rows, "event_type string, approx_distinct_users double")
+        return (
+            ev.groupBy("event_type")
+            .agg(F.hll_sketch_estimate(F.hll_sketch_agg("user_id", 12)).cast("double").alias("approx_distinct_users"))
+            .orderBy("event_type")
+        )
 
     q["hll_distinct_users"] = hll_distinct_users
 
     def tdigest_value_quantiles(spark, sf):
-        # t-digest per-key quantiles (merging variant, order-independent).
-        # Approximate → rows-only; rank-accuracy pinned in
-        # tests/test_recall_pins.py against exact percentiles.
-        from retailer_scrapers_spark.operators.tdigest import tdigest_by_key
-
+        # per-key quantiles from a KLL sketch (Spark's kll_sketch_agg;
+        # k = 1000 keeps the rank error near 0.3%). It compacts at random
+        # above k, so the answers are approximate and vary between runs →
+        # rows-only; rank-accuracy pinned in tests/test_recall_pins.py
+        # against exact percentiles.
         ev = _t(spark, sf, "events")
-        sk = tdigest_by_key(ev, "event_type", "value")
-        rows = [
-            (k, float(round(td.quantile(0.5), 3)), float(round(td.quantile(0.95), 3)))
-            for k, td in sorted(sk.items())
-        ]
-        return spark.createDataFrame(rows, "event_type string, p50 double, p95 double")
+        qs = F.kll_sketch_get_quantile_double(F.kll_sketch_agg_double("value", 1000), F.array(F.lit(0.5), F.lit(0.95)))
+        return (
+            ev.groupBy("event_type")
+            .agg(qs.alias("qs"))
+            .select("event_type", F.col("qs")[0].alias("p50"), F.col("qs")[1].alias("p95"))
+            .orderBy("event_type")
+        )
 
     q["tdigest_value_quantiles"] = tdigest_value_quantiles
 

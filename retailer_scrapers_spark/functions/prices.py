@@ -77,11 +77,6 @@ def promo_end_date(end_iso: Column) -> Column:
     ).otherwise(F.lit(""))
 
 
-def promo_message(msg: Column) -> Column:
-    """C5 — ``promotionTextMessage`` or ``'No promo'`` (scrape_pnp.py:187-200)."""
-    return F.coalesce(F.nullif(msg, F.lit("")), F.lit(NO_PROMO))
-
-
 OFFER_SENTENCE_RE = r"Offer valid\s+\d{1,2}\s+\w+\s+-\s+\d{1,2}\s+\w+\s+\d{4}"
 
 

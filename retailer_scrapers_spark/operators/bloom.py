@@ -94,6 +94,17 @@ def _next_pow2(n: int) -> int:
 STATE_DDL = (
     "partition_id int, filter_bytes binary, n_items long, m_bits long, k_hashes int, n_slices int"
 )
+# the same state row as the Arrow schema the executor-side builders emit
+STATE_SCHEMA = pa.schema(
+    [
+        ("partition_id", pa.int32()),
+        ("filter_bytes", pa.binary()),
+        ("n_items", pa.int64()),
+        ("m_bits", pa.int64()),
+        ("k_hashes", pa.int32()),
+        ("n_slices", pa.int32()),
+    ]
+)
 
 
 def build_bloom_state(
@@ -161,13 +172,14 @@ def build_bloom_state(
             out_counts.append(len(seg))
         yield pa.RecordBatch.from_pydict(
             {
-                "partition_id": pa.array(out_ids, type=pa.int32()),
-                "filter_bytes": pa.array(out_bytes, type=pa.binary()),
-                "n_items": pa.array(out_counts, type=pa.int64()),
-                "m_bits": pa.array([m_bits_aligned] * len(out_ids), type=pa.int64()),
-                "k_hashes": pa.array([k_hashes] * len(out_ids), type=pa.int32()),
-                "n_slices": pa.array([n_slices] * len(out_ids), type=pa.int32()),
-            }
+                "partition_id": out_ids,
+                "filter_bytes": out_bytes,
+                "n_items": out_counts,
+                "m_bits": [m_bits_aligned] * len(out_ids),
+                "k_hashes": [k_hashes] * len(out_ids),
+                "n_slices": [n_slices] * len(out_ids),
+            },
+            schema=STATE_SCHEMA,
         )
 
     return hashed.mapInArrow(build_partition, STATE_DDL)
@@ -194,16 +206,7 @@ def merge_filter_state(a: DataFrame, b: DataFrame) -> DataFrame:
                 "k_hashes": [tbl.column("k_hashes")[0].as_py()],
                 "n_slices": [tbl.column("n_slices")[0].as_py()],
             },
-            schema=pa.schema(
-                [
-                    ("partition_id", pa.int32()),
-                    ("filter_bytes", pa.binary()),
-                    ("n_items", pa.int64()),
-                    ("m_bits", pa.int64()),
-                    ("k_hashes", pa.int32()),
-                    ("n_slices", pa.int32()),
-                ]
-            ),
+            schema=STATE_SCHEMA,
         )
 
     return a.unionByName(b).groupBy("partition_id").applyInArrow(fold, STATE_DDL)

@@ -175,7 +175,7 @@ def upsert_cuckoo_state(
     import pyarrow as pa
     from pyspark.sql import functions as F
 
-    from retailer_scrapers_spark.operators.bloom import STATE_DDL, _next_pow2, with_url_hashes
+    from retailer_scrapers_spark.operators.bloom import STATE_DDL, STATE_SCHEMA, _next_pow2, with_url_hashes
 
     spark = df.sparkSession
     if state is None:
@@ -222,16 +222,7 @@ def upsert_cuckoo_state(
                 "k_hashes": [cf.bucket_size],
                 "n_slices": [int(n_slices)],
             },
-            schema=pa.schema(
-                [
-                    ("partition_id", pa.int32()),
-                    ("filter_bytes", pa.binary()),
-                    ("n_items", pa.int64()),
-                    ("m_bits", pa.int64()),
-                    ("k_hashes", pa.int32()),
-                    ("n_slices", pa.int32()),
-                ]
-            ),
+            schema=STATE_SCHEMA,
         )
 
     return keys.groupBy("__slice").cogroup(state.groupBy("partition_id")).applyInArrow(upd, STATE_DDL)

@@ -396,14 +396,17 @@ class CrawlPlan:
         self.catalog.write(metrics, "metrics", epoch)
         # mergeable sketch metrics (VERDICT r2 #7), checkpointed per epoch
         # like the membership filters: per-host HLL of touched URLs +
-        # t-digest of politeness waits; cross-epoch rollup = pure fold
-        # over the committed deltas (plans/metrics.py). Built and written
-        # fully executor-side — no sketch bytes through the driver
-        # (VERDICT r3 #4)
-        from retailer_scrapers_spark.plans.metrics import epoch_sketch_df
+        # KLL of politeness waits; cross-epoch rollup = one group-by
+        # over the committed deltas (plans/metrics.py). A host fetches
+        # at most per_host_budget rows an epoch, so a KLL k of at least
+        # that keeps each epoch's wait sketch exact, and a replay
+        # commits the same contents.
+        from retailer_scrapers_spark.plans.metrics import KLL_MIN_K, epoch_sketch_df
 
         self.catalog.write(
-            epoch_sketch_df(events, fetched.select("host", "wait_ms"), epoch),
+            epoch_sketch_df(
+                events, fetched.select("host", "wait_ms"), epoch, kll_k=max(KLL_MIN_K, cfg.per_host_budget)
+            ),
             "metrics_sketches",
             epoch,
         )
@@ -543,7 +546,8 @@ class CrawlPlan:
         wool = cat.read_all("staged_wool")
         if wool is not None:
             offer = cat.read_all("staged_offer")
-            offer_val = (offer.collect()[0][0] if offer is not None and not offer.isEmpty() else " ")
+            first = offer.head(1) if offer is not None else []
+            offer_val = first[0][0] if first else " "
             wool = wool.withColumn("promotion_valid", F.lit(offer_val))
             parts.append(wool.select("host", "page", "category", "pos", "name", "price",
                                      "promotion_price", "promotion_valid", "image_url", "image_id"))

@@ -85,16 +85,11 @@ def main() -> None:
     # cross-epoch sketch rollup (per-host HLL distinct URLs + wait percentiles)
     from retailer_scrapers_spark.plans.metrics import merged_sketches
 
-    sk = merged_sketches(plan.catalog)
+    sk = merged_sketches(plan.catalog, ranks=(0.5, 0.95))
     if sk["hll_urls"]:
-        summary["distinct_urls_touched_est"] = {
-            h: round(s.estimate(), 1) for h, s in sorted(sk["hll_urls"].items())
-        }
-    if sk["tdigest_wait_ms"]:
-        summary["wait_ms_p50_p95"] = {
-            h: [round(t.quantile(0.5), 1), round(t.quantile(0.95), 1)]
-            for h, t in sorted(sk["tdigest_wait_ms"].items())
-        }
+        summary["distinct_urls_touched_est"] = dict(sorted(sk["hll_urls"].items()))
+    if sk["kll_wait_ms"]:
+        summary["wait_ms_p50_p95"] = {h: w["quantiles"] for h, w in sorted(sk["kll_wait_ms"].items())}
     print(json.dumps(summary, default=str))
     spark.stop()
 

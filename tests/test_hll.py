@@ -1,62 +1,70 @@
-"""HyperLogLog: accuracy, merge associativity, serialization, and the
-distributed per-key build."""
+"""HyperLogLog (Spark's ``hll_sketch_agg`` at lgK 12, the crawl's
+``hll_urls`` sketch): accuracy, merge equals union, a round trip
+through parquet, and the distributed per-key build."""
 
-import numpy as np
+from pyspark.sql import functions as F
 
-from retailer_scrapers_spark.operators.hll import HyperLogLog, hll_by_key
-
-
-def _hashes(n, seed=0):
-    return np.random.default_rng(seed).integers(-(2**63), 2**63 - 1, n, dtype=np.int64)
+LG_K = 12
 
 
-def test_estimate_accuracy():
-    hll = HyperLogLog(p=12)
-    h = _hashes(100_000)
-    hll.add_hashes(h)
-    est = hll.estimate()
+def _values(spark, n, start=0, repeat=1):
+    """Values ``v{start}`` … ``v{start + n − 1}``, each ``repeat``
+    times, over 8 partitions."""
+    ids = spark.range(n * repeat, numPartitions=8)
+    return ids.select(F.concat(F.lit("v"), (F.col("id") % n + start).cast("string")).alias("v"))
+
+
+def _sketch(df):
+    return df.agg(F.hll_sketch_agg("v", LG_K).alias("s"))
+
+
+def _estimate(sketch_df):
+    return sketch_df.select(F.hll_sketch_estimate("s")).collect()[0][0]
+
+
+def test_estimate_accuracy(spark):
+    est = _estimate(_sketch(_values(spark, 100_000)))
     # standard error ≈ 1.04/sqrt(4096) ≈ 1.6%; allow 5%
     assert abs(est - 100_000) / 100_000 < 0.05, est
 
 
-def test_duplicates_dont_inflate():
-    hll = HyperLogLog(p=12)
-    h = _hashes(1000)
-    for _ in range(5):
-        hll.add_hashes(h)  # same values repeatedly
-    assert abs(hll.estimate() - 1000) / 1000 < 0.10
+def test_duplicates_dont_inflate(spark):
+    est = _estimate(_sketch(_values(spark, 1000, repeat=5)))  # same values repeatedly
+    assert abs(est - 1000) / 1000 < 0.10
 
 
-def test_small_range_linear_counting():
-    hll = HyperLogLog(p=12)
-    hll.add_hashes(_hashes(50))
-    assert abs(hll.estimate() - 50) < 8
+def test_small_range_linear_counting(spark):
+    est = _estimate(_sketch(_values(spark, 50)))
+    assert abs(est - 50) < 8
 
 
-def test_merge_equals_union():
-    a, b = HyperLogLog(12), HyperLogLog(12)
-    ha, hb = _hashes(30_000, 1), _hashes(30_000, 2)
-    a.add_hashes(ha)
-    b.add_hashes(hb)
-    u = HyperLogLog(12)
-    u.add_hashes(np.concatenate([ha, hb]))
-    merged = a.merge(b)
-    assert np.array_equal(merged.registers, u.registers)  # register-max == union
+def test_merge_equals_union(spark):
+    a, b = _values(spark, 30_000, start=0), _values(spark, 30_000, start=20_000)
+    sa, sb = _sketch(a), _sketch(b)
+    merged = sa.unionByName(sb).agg(F.hll_union_agg("s").alias("s"))
+    whole = _sketch(a.unionByName(b)).agg(F.hll_union_agg("s").alias("s"))
+    # register-max merge == the sketch of the union, byte for byte
+    assert merged.collect()[0][0] == whole.collect()[0][0]
+    assert abs(_estimate(merged) - 50_000) / 50_000 < 0.05
 
 
-def test_serialize_roundtrip():
-    hll = HyperLogLog(12)
-    hll.add_hashes(_hashes(5000))
-    rt = HyperLogLog.deserialize(hll.serialize())
-    assert np.array_equal(rt.registers, hll.registers) and rt.p == 12
+def test_serialize_roundtrip(spark, tmp_path):
+    sk = _sketch(_values(spark, 5000))
+    path = str(tmp_path / "hll")
+    sk.write.parquet(path)
+    back = spark.read.parquet(path)
+    assert back.collect()[0][0] == sk.collect()[0][0]
+    assert _estimate(back) == _estimate(sk)
 
 
 def test_hll_by_key_distributed(spark):
     rows = [(f"h{i % 4}.test", f"https://h{i % 4}.test/p/{i}") for i in range(40_000)]
     df = spark.createDataFrame(rows, "host string, url string").repartition(8)
-    sketches = hll_by_key(df, "host", "url")
-    assert set(sketches) == {f"h{i}.test" for i in range(4)}
-    for host, sk in sketches.items():
-        # 10k at p=12 sits in the classic-HLL bias band (2.5m–5m): ~2–5%
-        # high bias on top of the 1.6% stderr → 8% bound
-        assert abs(sk.estimate() - 10_000) / 10_000 < 0.08, (host, sk.estimate())
+    est = {
+        r.host: r.est
+        for r in df.groupBy("host").agg(F.hll_sketch_estimate(F.hll_sketch_agg("url", LG_K)).alias("est")).collect()
+    }
+    assert set(est) == {f"h{i}.test" for i in range(4)}
+    for host, e in est.items():
+        # 10k at lgK 12: 1.6% standard error → 8% bound
+        assert abs(e - 10_000) / 10_000 < 0.08, (host, e)

@@ -300,17 +300,28 @@ def test_frontier_next_exchange_count_bounded(spark, site_df, robots_df, seeds_d
     pins are cached (released, the optimizer would prune an unread
     stamp from the inlined lineage), and checked on epoch 1, whose
     frontier is read back from its snapshot: epoch 0's pinned seed
-    frontier is itself sequenced by one window."""
+    frontier is itself sequenced by one window.
+
+    The epoch's sketch metrics are JVM aggregates: epoch 0's
+    ``metrics_sketches`` write, planned at the write, runs no Python
+    node anywhere in its plan (a Python stage costs an Arrow worker
+    round trip per task)."""
     from retailer_scrapers_spark.plans.catalog import SnapshotCatalog
     from retailer_scrapers_spark.plans.crawl import CrawlConfig, CrawlPlan
 
     captured = {}
+    sketch_python_nodes = []
     orig_write = SnapshotCatalog.write
 
     def spy_write(self, df, table, epoch, meta=None):
         captured.setdefault((table, epoch), df)
         if table == "staged_html":
             df._jdf.queryExecution().executedPlan()
+        if (table, epoch) == ("metrics_sketches", 0):
+            sketch_python_nodes.extend(
+                n.nodeName() for n in executed_nodes(df)
+                if n.getClass().getName().startswith("org.apache.spark.sql.execution.python.")
+            )
         return orig_write(self, df, table, epoch, meta)
 
     work = str(tmp_path_factory.mktemp("plan_exchange"))
@@ -333,6 +344,8 @@ def test_frontier_next_exchange_count_bounded(spark, site_df, robots_df, seeds_d
         f"frontier' analysed plan has {n_nodes} nodes (pinned ≤ {SEQUENCED_FRONTIER_NODES // 4}) "
         "— a post-fetch branch or the seq stamp re-embeds a lineage again"
     )
+    assert ("metrics_sketches", 0) in captured
+    assert not sketch_python_nodes, f"Python stages in the metrics_sketches write: {sketch_python_nodes}"
     staged_html = captured[("staged_html", 1)]
     for node in executed_nodes(staged_html):
         name = node.nodeName()

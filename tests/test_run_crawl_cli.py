@@ -32,6 +32,11 @@ def test_run_crawl_cli_and_resume(tmp_path):
     assert first["resumed_from_epoch"] == 0
     assert first["epochs_committed"] == [0, 1]
     assert first["urls_seen"] > 0
+    # the cross-epoch sketch rollup, per host
+    distinct, waits = first["distinct_urls_touched_est"], first["wait_ms_p50_p95"]
+    assert distinct and set(waits) <= set(distinct)
+    assert all(n >= 1 for n in distinct.values())
+    assert all(len(w) == 2 and 0 <= w[0] <= w[1] for w in waits.values())
 
     second = _run(work, 4)  # same workdir → resumes at epoch 2
     assert second["resumed_from_epoch"] == 2
