@@ -22,13 +22,9 @@ def topk_per_host(
 ) -> DataFrame:
     """R6 — host-bucketed priority queue: each epoch fetches the top-k
     pending URLs per host by (priority desc, seq asc). One shuffle on
-    ``host``; the window is rank-limited so AQE can pipeline it."""
-    w = Window.partitionBy(host_col).orderBy(F.col(priority_col).desc(), F.col(seq_col).asc())
-    return (
-        df.withColumn("__rank", F.row_number().over(w))
-        .filter(F.col("__rank") <= per_host_budget)
-        .drop("__rank")
-    )
+    ``host``; the window is rank-limited so AQE can pipeline it. The
+    selected half of :func:`split_topk_per_host`."""
+    return split_topk_per_host(df, per_host_budget, host_col, priority_col, seq_col)[0]
 
 
 def split_topk_per_host(

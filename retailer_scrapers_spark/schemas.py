@@ -39,9 +39,9 @@ FRONTIER = T.StructType(
     ]
 )
 
-# Serialized per-partition (key-space slice) membership-filter state
-# (SURVEY.md §1.3). One row per slice for the sliced Bloom; a single row
-# (partition_id=0) for the cuckoo, whose blob embeds its own slicing.
+# Serialized per-partition (key-space slice) Bloom seen-filter state
+# (SURVEY.md §1.3): one row per slice, ``partition_id`` the slice id,
+# ``filter_bytes`` its raw bits, ``m_bits`` the whole filter's bit count.
 SEEN_FILTER_STATE = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType(), False),

@@ -32,8 +32,6 @@ def main() -> None:
     ap.add_argument("--finalize", action="store_true", help="assemble the products table after crawling")
     ap.add_argument("--politeness-mode", choices=("epoch", "continuous"), default="epoch",
                     help="continuous: per-host wait carries across epochs (checkpointed sched_state)")
-    ap.add_argument("--filter-kind", choices=("bloom", "cuckoo"), default="bloom",
-                    help="URL-seen membership structure (cuckoo supports deletion, delta-inserts per epoch)")
     ap.add_argument("--compact-seen-every", type=int, default=0,
                     help="every N epochs fold the seen deltas into one compacted generation (0=never)")
     args = ap.parse_args()
@@ -62,7 +60,6 @@ def main() -> None:
         per_host_budget=args.per_host_budget,
         epoch_budget_s=args.epoch_budget_s,
         politeness_mode=args.politeness_mode,
-        filter_kind=args.filter_kind,
         compact_seen_every=args.compact_seen_every,
     )
     plan = CrawlPlan(spark, cfg, site, robots)

@@ -373,23 +373,32 @@ def test_saturated_state_skips_probe(spark):
     assert _split_sets(r_unseen, r_dup) == got
 
 
-def test_loaded_cuckoo_state_still_probes(spark):
-    """A cuckoo table at 0.9 load keeps the probe: its fpp does not grow
-    with load the way a Bloom filter's does (its row geometry alone
-    would read as saturated)."""
-    from retailer_scrapers_spark.operators.cuckoo import upsert_cuckoo_state
+def test_cuckoo_checkpoint_state_is_rejected(spark):
+    """A seen_filter state written by an older cuckoo-filter crawl (one
+    ``CKF1`` table per slice) is not Bloom bits. Both entry points fail
+    loudly on it: the split reads the header in its state-row lookup,
+    before the row's fill (here past the bypass crossover) could skip
+    the probe, and the probe fails on the blob itself. Probed as Bloom
+    bits, or merged with a Bloom delta, it would give false negatives."""
+    import struct
 
-    urls = _bench_urls(spark, n=8_000)
-    seen = urls.filter(F.col("id") < 7_372).select("url_canon")
-    state = spark.createDataFrame(upsert_cuckoo_state(None, seen, capacity=64, n_slices=1).collect())
-    row = state.first()
-    assert bytes(row.filter_bytes[:4]) == b"CKF1" and row.n_items / row.m_bits >= 0.89
-    unseen, dup = filter_unseen_split_state(urls.select("url_canon"), state, seen, n_slices=1)
-    assert "FlatMapCoGroupsInArrow" in _plan(unseen), _plan(unseen)
-    truth = {r.url_canon for r in seen.collect()}
-    assert _split_sets(unseen, dup) == (
-        sorted({r.url_canon for r in urls.collect()} - truth), sorted(truth)
-    )
+    import pytest
+
+    from retailer_scrapers_spark.operators.bloom import STATE_DDL, _probe_slice_blob
+
+    # 16 buckets x 4 slots of 16-bit fingerprints behind a CKF1 header:
+    # n_buckets, bucket_size, pad, n_items
+    blob = b"CKF1" + struct.pack("<QIIQ", 16, 4, 0, 60) + bytes(16 * 4 * 2)
+    state = spark.createDataFrame([(0, blob, 60, 64, 4, 1)], STATE_DDL)
+    urls = _bench_urls(spark, n=50).select("url_canon")
+    seen = urls.limit(10)
+    with pytest.raises(ValueError, match="incompatible filter state: CKF1"):
+        filter_unseen_split_state(urls, state, seen, n_slices=1)
+    with pytest.raises(Exception, match="incompatible filter state: CKF1"):
+        probe_filter_state(urls, state, n_slices=1).collect()
+    h = np.array([1, 2], dtype=np.int64)
+    with pytest.raises(ValueError, match="incompatible filter state: CKF1"):
+        _probe_slice_blob(blob, 4, 0, h, h, expected_m_slice=64)
 
 
 def test_unmerged_generations_keep_the_probe(spark):

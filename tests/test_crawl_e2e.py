@@ -120,22 +120,6 @@ def test_resume_matches_uninterrupted(spark, baseline_crawl_10x6, resumed_crawl_
     assert f1.isEmpty() and f2.isEmpty()
 
 
-def test_crawl_with_cuckoo_filter_matches_bloom_seen_set(
-    spark, site_df, robots_df, seeds_df, crawl_run, tmp_path_factory
-):
-    """filter_kind='cuckoo' must produce the same crawl (the membership
-    structure is an implementation detail of D6, not a semantics change)."""
-    work = str(tmp_path_factory.mktemp("crawl_ckf"))
-    cfg = CrawlConfig(workdir=work, epochs=10, per_host_budget=8, filter_kind="cuckoo", bloom_bits=1 << 14)
-    plan = CrawlPlan(spark, cfg, site_df, robots_df)
-    plan.run(seeds_df)
-    bloom_plan, _ = crawl_run
-    seen_cuckoo = {r.url_canon for r in plan.catalog.read_all("seen").collect()}
-    seen_bloom = {r.url_canon for r in bloom_plan.catalog.read_all("seen").collect()}
-    assert seen_cuckoo == seen_bloom
-    assert plan.catalog.read("frontier").isEmpty()
-
-
 def test_crawl_with_per_host_retry_budgets(spark, site_df, robots_df, seeds_df, crawl_run, tmp_path_factory):
     """A robots `max_attempts` column routes through the epoch loop
     (R4 per-host budgets). With unlimited budgets everywhere (-1) the
@@ -216,13 +200,13 @@ def test_crash_after_any_write_resumes_to_the_uninterrupted_state(
     spark, robots_df, seeds_df, tmp_path_factory, monkeypatch
 ):
     """R8 crash-point sweep. Epoch 1 of a continuous-politeness crawl
-    with the cuckoo filter writes every per-epoch table, sched_state and
-    the cuckoo upkeep included. The crawl is aborted after each of those
-    writes in turn, then resumed by a fresh CrawlPlan; every committed
-    table must equal an uninterrupted run's as a multiset (fetch_log
-    without its execution-detail partition_id), and the filter must hold
-    one fingerprint per seen URL — a replay neither duplicates staged
-    rows nor re-inserts its keys."""
+    writes every per-epoch table, sched_state and the seen-filter merge
+    included. The crawl is aborted after each of those writes in turn,
+    then resumed by a fresh CrawlPlan; every committed table must equal
+    an uninterrupted run's as a multiset (fetch_log without its
+    execution-detail partition_id), and the filter must count each seen
+    URL once (the merge sums per-delta n_items) — a replay neither
+    duplicates staged rows nor re-merges its keys."""
     import shutil
     from collections import Counter
 
@@ -244,7 +228,7 @@ def test_crash_after_any_write_resumes_to_the_uninterrupted_state(
 
     def plan(work):
         cfg = CrawlConfig(
-            workdir=work, epochs=2, per_host_budget=6, filter_kind="cuckoo", bloom_bits=1 << 14,
+            workdir=work, epochs=2, per_host_budget=6, bloom_bits=1 << 14,
             politeness_mode="continuous", epoch_budget_s=26.0,
         )
         return CrawlPlan(spark, cfg, site_df, robots_df)
@@ -316,7 +300,7 @@ def test_epoch_replay_does_not_duplicate_staged_rows(
     commits (fetch_log … frontier) while keeping the staged commits,
     then resume: staged tables must match an uninterrupted run
     row-for-row (the shared ``baseline_crawl_10x6`` fixture, identical
-    config). The crash-point sweep covers the continuous/cuckoo path."""
+    config). The crash-point sweep covers the continuous path."""
     import shutil
 
     w1 = baseline_crawl_10x6
@@ -347,17 +331,16 @@ def test_torn_filter_commit_replay_does_not_double_insert(
 ):
     """On resume after a torn commit (seen_filter epoch N committed,
     frontier not), the filter must be read at the FRONTIER's epoch —
-    reading the epoch-N filter would make the cuckoo replay re-insert
-    epoch-N's keys (duplicated fingerprints, inflated n_items). With
-    load_epoch reading seen_filter at epoch − 1, the replayed epoch
-    inserts each key exactly once: Σ n_items == |seen| at the end of a
-    default-politeness crawl torn several epochs before it drains."""
+    reading the epoch-N filter would make the replay re-merge epoch-N's
+    delta into a state that already holds it (the merge sums n_items,
+    so the count inflates). With load_epoch reading seen_filter at
+    epoch − 1, the replayed epoch merges each key exactly once:
+    Σ n_items == |seen| at the end of a default-politeness crawl torn
+    several epochs before it drains."""
     import shutil
 
     work = str(tmp_path_factory.mktemp("torn_filter"))
-    cfg = CrawlConfig(
-        workdir=work, epochs=10, per_host_budget=6, filter_kind="cuckoo", bloom_bits=1 << 14
-    )
+    cfg = CrawlConfig(workdir=work, epochs=10, per_host_budget=6, bloom_bits=1 << 14)
     CrawlPlan(spark, cfg, site_df, robots_df).run(seeds_df, epochs=3)
     # tear epoch 2: filter + seen committed, frontier commit lost
     shutil.rmtree(f"{work}/frontier/epoch=2")
@@ -367,5 +350,5 @@ def test_torn_filter_commit_replay_does_not_double_insert(
     cat = SnapshotCatalog(work, spark)
     n_seen = cat.read_all("seen").count()
     n_items = cat.read("seen_filter").agg(F.sum("n_items")).collect()[0][0]
-    assert n_items == n_seen, f"filter holds {n_items} fingerprints for {n_seen} seen URLs"
+    assert n_items == n_seen, f"filter counts {n_items} keys for {n_seen} seen URLs"
     assert cat.read("frontier").isEmpty()

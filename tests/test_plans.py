@@ -244,12 +244,11 @@ def test_filter_operators_never_gather_on_the_driver():
     allowed."""
     import inspect
 
-    from retailer_scrapers_spark.operators import bloom, cuckoo
+    from retailer_scrapers_spark.operators import bloom
 
-    for mod in (bloom, cuckoo):
-        src = inspect.getsource(mod)
-        for banned in ("sparkContext.broadcast(", "sc.broadcast(", ".collect()"):
-            assert banned not in src, f"{mod.__name__} uses {banned}"
+    src = inspect.getsource(bloom)
+    for banned in ("sparkContext.broadcast(", "sc.broadcast(", ".collect()"):
+        assert banned not in src, f"{bloom.__name__} uses {banned}"
 
 
 def analysed_nodes(df) -> int:

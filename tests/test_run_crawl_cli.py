@@ -76,15 +76,14 @@ def test_spark_submit_pyfiles(tmp_path):
     env = dict(os.environ, SPARK_GRAFT_CODEGEN="off", SPARK_GRAFT_AQE="off",
                SPARK_GRAFT_CPUS="8")
     env.pop("PYTHONPATH", None)
-    # continuous politeness + cuckoo filter + compaction through the
+    # continuous politeness + compaction through the
     # SAME deployment path (VERDICT r4 #10: the feature matrix was only
     # e2e-tested via the plain CLI, not via spark-submit)
     out = subprocess.run(
         [spark_submit, "--master", "local[4]", "--driver-memory", "8g",
          "--py-files", zip_path, "run_crawl.py",
          "--workdir", str(tmp_path / "work"), "--epochs", "2",
-         "--politeness-mode", "continuous", "--filter-kind", "cuckoo",
-         "--compact-seen-every", "2"],
+         "--politeness-mode", "continuous", "--compact-seen-every", "2"],
         capture_output=True, text=True, timeout=540, cwd=str(tmp_path), env=env,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -97,12 +96,10 @@ def test_spark_submit_pyfiles(tmp_path):
 
 
 def test_run_crawl_cli_mode_flags(tmp_path):
-    """--politeness-mode/--filter-kind/--compact-seen-every reach the
-    CrawlConfig: the run checkpoints sched_state, a cuckoo filter blob,
-    and a compacted seen generation."""
+    """--politeness-mode/--compact-seen-every reach the CrawlConfig: the
+    run checkpoints sched_state and a compacted seen generation."""
     work = str(tmp_path / "cli_flags")
-    out = _run(work, 2, "--politeness-mode", "continuous",
-               "--filter-kind", "cuckoo", "--compact-seen-every", "1")
+    out = _run(work, 2, "--politeness-mode", "continuous", "--compact-seen-every", "1")
     assert out["epochs_committed"] == [0, 1]
     assert os.path.isdir(f"{work}/sched_state")
     assert os.path.isdir(f"{work}/seen__compacted")

@@ -1,6 +1,6 @@
 """Continuous-mode + compaction soak (VERDICT r3 next #10): a 12-epoch
-crawl with ``compact_seen_every=4``, continuous politeness, and the
-cuckoo filter — asserting (a) cross-epoch carry spacing survives
+crawl with ``compact_seen_every=4`` and continuous politeness —
+asserting (a) cross-epoch carry spacing survives
 compaction boundaries (exact parity vs the reference executor), (b) a
 mid-crawl kill + resume lands on the identical final state, and (c)
 ``read_all('seen')`` stays O(few) files after compaction."""
@@ -28,7 +28,6 @@ def _cfg(work: str) -> CrawlConfig:
         per_host_budget=PER_HOST,
         epoch_budget_s=BUDGET_S,
         politeness_mode="continuous",
-        filter_kind="cuckoo",
         compact_seen_every=COMPACT_EVERY,
     )
 
