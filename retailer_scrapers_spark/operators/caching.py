@@ -31,15 +31,18 @@ def unpersist_when_collected(result: DataFrame, *cached: DataFrame) -> DataFrame
     further transformations should keep the returned handle alive until
     their terminal action, or release deterministically via the
     attached ``result.release_caches()`` (idempotent; also detaches the
-    finalizer).
+    finalizer). A ``result`` that already carries caches
+    (:func:`carry_caches`) releases those with its own.
     """
 
-    def _release(cs=tuple(cached)) -> None:
+    def _release(cs=tuple(cached), carried=getattr(result, "release_caches", None)) -> None:
         for c in cs:
             try:
                 c.unpersist(blocking=False)
             except Exception:
                 pass  # session already stopped
+        if carried is not None:
+            carried()
 
     fin = weakref.finalize(result, _release)
     result.release_caches = fin  # explicit, idempotent early release

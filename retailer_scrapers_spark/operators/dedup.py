@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from retailer_scrapers_spark.functions.prices import NO_PROMO
-from retailer_scrapers_spark.operators.caching import unpersist_when_collected
+from retailer_scrapers_spark.operators.caching import carry_caches, unpersist_when_collected
 
 
 # ---------------------------------------------------------------------------
@@ -142,11 +142,12 @@ def repair_duplicate_indexes(
                 # prefix-sum's block join; "" sorts it first, as the window does
                 parts.append(F.concat(F.coalesce(F.lpad(col.cast("string"), 20, "0"), F.lit("")), F.lit("\x00")))
         packed = dupes.withColumn("__ord", F.concat(*parts))
-        reassigned = (
-            global_sequence(packed, order_col="__ord", out_col="__seq", start=0, block_cap=block_cap)
-            .crossJoin(F.broadcast(base))
+        seqd = global_sequence(packed, order_col="__ord", out_col="__seq", start=0, block_cap=block_cap)
+        reassigned = carry_caches(
+            seqd.crossJoin(F.broadcast(base))
             .withColumn(id_col, F.col("__seq") + F.col("m"))
-            .drop("m", "__ord", "__seq")
+            .drop("m", "__ord", "__seq"),
+            seqd,
         )
     else:
         w_seq = Window.orderBy(*[F.col(c).asc() for c in order_cols], F.col(id_col).asc())
@@ -155,7 +156,7 @@ def repair_duplicate_indexes(
             .withColumn(id_col, F.row_number().over(w_seq) + F.col("m"))
             .drop("m")
         )
-    return unpersist_when_collected(keep.unionByName(reassigned), marked)
+    return unpersist_when_collected(carry_caches(keep.unionByName(reassigned), reassigned), marked)
 
 
 # ---------------------------------------------------------------------------

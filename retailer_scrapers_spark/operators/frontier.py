@@ -159,10 +159,15 @@ def global_sequence(
 
     Small inputs: ``block_cap`` is already the most rows the
     distributed form lets one window task sort, so when the row total
-    is ≤ ``block_cap`` (read from the same sizing aggregate as the
-    block maximum — no extra action) the input is ranked by that one
-    window directly. This skips the offset tables and their two joins,
-    which re-embed the input's lineage in every consumer's plan.
+    is ≤ ``block_cap`` the input is ranked by that one window directly.
+    This skips the offset tables and their two joins, which re-embed
+    the input's lineage in every consumer's plan. The input is
+    persisted and the total is one ``count`` over that cache, so the
+    count runs the caller's lineage once and the consumer's action
+    reads the cached rows instead of running it again. The cache is
+    released with the result handle (``unpersist_when_collected``); a
+    caller that derives a frame from the result and drops the handle
+    keeps it alive with ``carry_caches``.
 
     How (three-level distributed prefix-sum): strings sharing a
     fixed-length prefix form a CONTIGUOUS block of the lexicographic
@@ -190,34 +195,37 @@ def global_sequence(
     therefore derived from the data, deterministically: block sizes at
     ``prefix_len`` are aggregated (the step-2 table, computed anyway
     and persisted); while any block exceeds ``block_cap`` the prefix
-    doubles, up to ``max_prefix_len``. The common case pays one tiny
-    MAX + SUM over the block table (the SUM picks the small-input
-    window above; with ``prefix_len`` ≥ ``max_prefix_len`` no sizing
-    runs and the prefix-sum is used); only genuinely prefix-degenerate
-    inputs pay re-aggregation rounds. No sampling — the chosen length
-    is a pure function of the input, so resume/replay parity holds.
+    doubles, up to ``max_prefix_len``. Above ``block_cap`` rows the
+    common case pays one tiny MAX over the block table (none with
+    ``prefix_len`` ≥ ``max_prefix_len``); only genuinely
+    prefix-degenerate inputs pay re-aggregation rounds. No sampling —
+    the chosen length is a pure function of the input, so
+    resume/replay parity holds.
     """
+    from pyspark import StorageLevel
+
     from retailer_scrapers_spark.operators.caching import unpersist_when_collected
 
     o = F.col(order_col)
+    # the sizing count fills this cache and the consumer reads it back;
+    # an input the caller has cached already stays the caller's to release
+    owned = [df] if df.storageLevel == StorageLevel.NONE else []
+    cached = df.persist()
+    if cached.count() <= block_cap:
+        # one block holds every row: one window task, no offset joins
+        w_all = Window.orderBy(o.asc())
+        out = cached.withColumn(out_col, (F.lit(start) + F.row_number().over(w_all)).cast("long"))
+        return unpersist_when_collected(out, *owned)
 
     def tag(fine_len: int):
-        t = df.withColumn("__gk", F.substring(o, 1, fine_len)).withColumn(
+        t = cached.withColumn("__gk", F.substring(o, 1, fine_len)).withColumn(
             "__ck", F.substring(o, 1, coarse_len)
         )
         return t, t.groupBy("__ck", "__gk").agg(F.count(F.lit(1)).alias("__n")).persist()
 
     fine_len = prefix_len
     tagged, sizes = tag(fine_len)
-    while fine_len < max_prefix_len:
-        mx, total = sizes.agg(F.max("__n"), F.sum("__n")).collect()[0]
-        if (total or 0) <= block_cap:
-            # one block holds every row: one window task, no offset joins
-            sizes.unpersist(blocking=False)
-            w_all = Window.orderBy(o.asc())
-            return df.withColumn(out_col, (F.lit(start) + F.row_number().over(w_all)).cast("long"))
-        if (mx or 0) <= block_cap:
-            break
+    while fine_len < max_prefix_len and (sizes.agg(F.max("__n")).collect()[0][0] or 0) > block_cap:
         sizes.unpersist(blocking=False)
         fine_len = min(2 * fine_len, max_prefix_len)
         tagged, sizes = tag(fine_len)
@@ -240,8 +248,8 @@ def global_sequence(
         .drop("__gk", "__ck", "__in", "__off")
     )
     # the block-size cache feeds both the sizing probe and the offsets;
-    # release it with the result handle
-    return unpersist_when_collected(out, sizes)
+    # release it and the input cache with the result handle
+    return unpersist_when_collected(out, *owned, sizes)
 
 
 def assign_global_indexes(

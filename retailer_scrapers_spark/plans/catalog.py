@@ -18,6 +18,13 @@ only after the new one is in place, so a committed copy exists at every
 instant, and a reader puts back an aside copy that a crash left
 without its replacement. ``latest_epoch`` + ``read`` give time travel.
 
+A read starts no Spark job. Spark stores each part file's schema in its
+footer (``org.apache.spark.sql.parquet.row.metadata``); the catalog
+reads that key from one part file and hands the schema to
+``spark.read``, where Spark would otherwise run a one-task job to read
+a footer for schema inference. A snapshot without the key (not written
+by Spark) is inferred as before, so the format is unchanged.
+
 Visibility is per table. A crawl epoch commits several tables and its
 ``frontier`` snapshot last, so the frontier commit is the epoch's commit
 point: resume (R8) reads every table as of the latest committed
@@ -31,10 +38,26 @@ import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 COMMIT_MARKER = "_COMMIT"
 ASIDE = ".aside"
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(paths: list[str]) -> StructType | None:
+    """The Spark schema stored in the footer of the first part file
+    under ``paths``, or None when there is no part file or no such key.
+    One footer stands for all of them, as in Spark's own inference
+    without ``mergeSchema``: a table's snapshots share one schema."""
+    for path in paths:
+        for name in sorted(os.listdir(path)):
+            if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                raw = (pq.read_metadata(os.path.join(path, name)).metadata or {}).get(SPARK_SCHEMA_KEY)
+                return StructType.fromJson(json.loads(raw)) if raw else None
+    return None
 
 
 class SnapshotCatalog:
@@ -83,6 +106,15 @@ class SnapshotCatalog:
         else:
             os.rename(aside, path)
 
+    def _read(self, paths: list[str]) -> DataFrame:
+        """Committed snapshot directories as one DataFrame, read with
+        their footer schema so that no inference job runs."""
+        reader = self.spark.read
+        schema = _footer_schema(paths)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*paths)
+
     def committed_epochs(self, table: str) -> list[int]:
         tdir = self._table_dir(table)
         if not os.path.isdir(tdir):
@@ -109,7 +141,7 @@ class SnapshotCatalog:
             return None
         path = self._epoch_dir(table, epoch)
         self._restore(path)
-        return self.spark.read.parquet(path)
+        return self._read([path])
 
     def read_all(self, table: str, max_epoch: int | None = None) -> DataFrame | None:
         """Union of ALL committed epoch snapshots (optionally only those
@@ -138,7 +170,7 @@ class SnapshotCatalog:
         parts += [self._epoch_dir(table, e) for e in eps]
         if not parts:
             return None
-        return self.spark.read.parquet(*parts)
+        return self._read(parts)
 
     def compact(self, table: str, through: int | None = None) -> None:
         """Iceberg-style maintenance for delta-append tables: merge the
@@ -164,7 +196,7 @@ class SnapshotCatalog:
         parts = ([self._epoch_dir(ctable, prev)] if prev is not None else []) + [
             self._epoch_dir(table, e) for e in eps
         ]
-        union = self.spark.read.parquet(*parts)
+        union = self._read(parts)
         new_gen = eps[-1]
         self.write(union, ctable, new_gen)
         # cleanup: superseded raw deltas + older compacted generations

@@ -44,6 +44,7 @@ from retailer_scrapers_spark.operators.bloom import (
     filter_unseen_split_state,
     merge_filter_state,
 )
+from retailer_scrapers_spark.operators.caching import carry_caches
 from retailer_scrapers_spark.operators.dedup import (
     dedup_keep_promo,
     drop_duplicates_first,
@@ -380,14 +381,15 @@ class CrawlPlan:
 
         # lineage + per-host metrics; partition_id is the partition that
         # ran the fetch, read before the fetch_seq stamp reorders rows
-        fetch_log = stamp_fetch_seq(fetched.select(
+        stamped = stamp_fetch_seq(fetched.select(
             "url_canon", "host", "seq", "status", "outcome", "attempt", "wait_ms", "scheduled_offset_ms",
             F.spark_partition_id().alias("partition_id"),
-        )).select(
+        ))
+        fetch_log = carry_caches(stamped.select(
             "url_canon", "host", F.lit(epoch).alias("epoch"), "fetch_seq", "status",
             outcome.alias("result"),
             "attempt", "partition_id", "wait_ms", "scheduled_offset_ms",
-        )
+        ), stamped)
         self.catalog.write(fetch_log, "fetch_log", epoch)
         # every settled row but the untouched backlog is an event
         events = settled.filter(outcome != "backlog").select("url_canon", "host", outcome.alias("result"))

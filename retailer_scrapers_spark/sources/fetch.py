@@ -61,8 +61,11 @@ def stamp_fetch_seq(fetched: DataFrame) -> DataFrame:
     than its ``block_cap`` rows, so a small fetch set is ranked by one
     window and returned as one partition. The epoch loop therefore
     stamps only the fetch log's projection, never the fetched frame
-    the parsers and discovery read.
+    the parsers and discovery read. The returned frame carries the
+    sequencing caches (``carry_caches``), so the write that reads it
+    reads the cached input instead of re-running its lineage.
     """
+    from retailer_scrapers_spark.operators.caching import carry_caches
     from retailer_scrapers_spark.operators.frontier import global_sequence
 
     key = F.concat(
@@ -78,7 +81,7 @@ def stamp_fetch_seq(fetched: DataFrame) -> DataFrame:
         prefix_len=30,
         coarse_len=19,
     )
-    return stamped.drop("__fetch_key")
+    return carry_caches(stamped.drop("__fetch_key"), stamped)
 
 
 def fetch_images(products: DataFrame, corpus: DataFrame, image_id_col: str = "image_id") -> DataFrame:

@@ -127,3 +127,73 @@ def test_compact_respects_through_and_max_epoch(spark, tmp_path):
     cat.compact("t", through=2)  # epoch 3 stays a raw delta
     assert sorted(r.id for r in cat.read_all("t", max_epoch=2).collect()) == list(range(30))
     assert sorted(r.id for r in cat.read_all("t").collect()) == list(range(40))
+
+
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema]
+
+
+def test_snapshot_read_starts_no_job_and_keeps_its_schema(spark, tmp_path):
+    """A read takes its schema from the snapshot's own part-file footer:
+    ``read``, ``read_all`` over a compacted generation plus two deltas,
+    and their ``.schema`` start no Spark job (schema inference runs a
+    one-task job per read). The schema is the one written — the Bloom
+    state's ``partition_id`` stays int (the probe's cogroup keys must
+    share one type), as do ``metrics`` and an empty snapshot's — and
+    equals what Spark itself infers."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType
+
+    from retailer_scrapers_spark.operators.bloom import build_bloom_state
+    from tests.test_bloom import _jobs_run
+
+    cat = SnapshotCatalog(str(tmp_path), spark)
+    urls = spark.range(40).select(F.concat(F.lit("https://h.test/"), F.col("id").cast("string")).alias("url_canon"))
+    written = {
+        "seen_filter": build_bloom_state(urls, "url_canon", 1 << 12, 3, n_slices=4),
+        "metrics": spark.createDataFrame([("h.test", "ok", 3)], "host string, result string, n long")
+        .withColumn("epoch", F.lit(0)),
+        "empty": urls.limit(0),
+    }
+    for table, df in written.items():
+        cat.write(df, table, 0)
+    for e in range(4):
+        cat.write(urls.filter(F.substring("url_canon", -1, 1).cast("int") % 4 == e), "seen", e)
+    cat.compact("seen", through=1)
+    reads = {}
+
+    def read_all_tables():
+        for table in written:
+            reads[table] = cat.read(table, 0)
+        reads["seen"] = cat.read_all("seen")
+        for df in reads.values():
+            df.schema
+
+    assert _jobs_run(spark, "snapshot-read", read_all_tables) == 0
+    assert len(reads["seen"].inputFiles()) >= 3  # compacted generation + deltas 2 and 3
+    for table, df in written.items():
+        assert _fields(reads[table].schema) == _fields(df.schema), table
+        assert reads[table].schema == spark.read.parquet(cat._epoch_dir(table, 0)).schema, table
+    assert reads["seen_filter"].schema["partition_id"].dataType == IntegerType()
+    assert _fields(reads["seen"].schema) == _fields(urls.schema)
+    assert sorted(r.url_canon for r in reads["seen"].collect()) == sorted(r.url_canon for r in urls.collect())
+    assert reads["empty"].count() == 0
+
+
+def test_snapshot_without_spark_footer_schema_is_inferred(spark, tmp_path):
+    """A committed snapshot whose part file Spark did not write (no
+    Spark schema in its footer) is read with an inferred schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from retailer_scrapers_spark.plans.catalog import COMMIT_MARKER
+
+    cat = SnapshotCatalog(str(tmp_path), spark)
+    path = cat._epoch_dir("t", 0)
+    os.makedirs(path)
+    pq.write_table(pa.table({"id": pa.array([1, 2, 3], pa.int64())}), os.path.join(path, "part-0.parquet"))
+    with open(os.path.join(path, COMMIT_MARKER), "w") as f:
+        f.write('{"epoch": 0}')
+    df = cat.read("t")
+    assert df.columns == ["id"]
+    assert sorted(r.id for r in df.collect()) == [1, 2, 3]

@@ -213,6 +213,32 @@ def test_d2_prefix_sum_keeps_null_ids(spark):
         assert sorted((r.name, r["index"]) for r in out.collect()) == expected, f"block_cap={cap}"
 
 
+def test_d2_prefix_sum_keeps_its_sequence_cache_until_released(spark):
+    """The prefix-sum path derives its result from global_sequence's
+    handle (a cross join, then a union); the sequencing caches ride with
+    the result (carry_caches), so its rank window reads the cached input,
+    and they go with the result handle or its release_caches()."""
+    import gc
+    import re
+
+    rows = [(i % 7, f"n{i % 13}", f"R{i % 5}") for i in range(200)]
+    df = spark.createDataFrame(rows, "index long, name string, price string").repartition(7)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    for release in (False, True):
+        big = D.repair_duplicate_indexes(df, "index", 99, ("name", "price"), block_cap=0)
+        gc.collect()
+        plan = big._jdf.queryExecution().executedPlan().toString()
+        # the packed sequencing input (the one with __ord) is read from its cache
+        assert re.search(r"InMemoryTableScan \[[^\]]*__ord", plan), plan
+        assert big.count() == 200
+        if release:
+            big.release_caches()
+        else:
+            del big
+            gc.collect()
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == before, f"release_caches={release}"
+
+
 def test_d2_hybrid_paths_identical(spark):
     """VERDICT r4 #3: the resequencing is hybrid on duplicate-subset
     size. Both paths — the bounded single-task window (small subsets)

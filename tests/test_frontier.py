@@ -208,6 +208,82 @@ def test_global_sequence_one_window_up_to_block_cap(spark):
         assert (plan.count("Window [") == 1) == one_window, plan
 
 
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _row_windows(df) -> list:
+    """The row_number Window nodes of ``df``'s executed plan (walked in
+    the JVM): the one-window rank, or the prefix-sum's in-block rank."""
+    found, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+        if node.nodeName() == "Window" and "row_number()" in node.simpleString(100):
+            found.append(node)
+    return found
+
+
+def test_global_sequence_consumer_reads_the_cached_input(spark):
+    """The sizing count runs the input's lineage once, into a cache the
+    consumer's rank window reads (an InMemoryTableScan under it), on the
+    one-window path and on the prefix-sum; dropping the result handle
+    releases every cache the call made."""
+    import gc
+
+    n = 60
+    df = spark.createDataFrame([(f"https://h{i % 3}.test/{i}",) for i in range(n)], "url_canon string")
+    expected = _naive_rank([r.url_canon for r in df.collect()])
+    before = _persisted(spark)
+    for cap in _both_paths(n):
+        out = FR.global_sequence(df, "url_canon", "seq", block_cap=cap)
+        windows = _row_windows(out)
+        assert windows, f"block_cap={cap}: no row_number window"
+        for w in windows:
+            assert "InMemoryTableScan" in w.toString(), f"block_cap={cap}: rank window re-runs its input\n{w}"
+        assert {r.url_canon: r.seq for r in out.collect()} == expected, f"block_cap={cap}"
+        assert _persisted(spark) > before, f"block_cap={cap}: cache not live while the result is held"
+        del out, windows, w
+        gc.collect()
+        assert _persisted(spark) == before, f"block_cap={cap}: caches outlive the result handle"
+
+
+def test_global_sequence_leaves_a_cached_input_to_its_owner(spark):
+    """An input the caller cached is read, not released, by the result."""
+    import gc
+
+    df = spark.createDataFrame([(f"u{i}",) for i in range(20)], "url_canon string").persist()
+    df.count()
+    out = FR.global_sequence(df)
+    assert sorted(r.seq for r in out.collect()) == list(range(1, 21))
+    del out
+    gc.collect()
+    assert df.storageLevel.useMemory
+    df.unpersist()
+
+
+def test_stamp_fetch_seq_carries_its_cache(spark):
+    """stamp_fetch_seq returns a frame derived from global_sequence's
+    result and drops that handle; the cache lives on with the derived
+    frame (carry_caches) until the consumer drops it."""
+    import gc
+
+    from retailer_scrapers_spark.sources.fetch import stamp_fetch_seq
+
+    rows = [(i * 10, f"h{i % 3}.test", i) for i in range(30)]
+    fetched = spark.createDataFrame(rows, "scheduled_offset_ms long, host string, seq long")
+    before = _persisted(spark)
+    log = stamp_fetch_seq(fetched)
+    gc.collect()
+    windows = _row_windows(log)
+    assert windows and all("InMemoryTableScan" in w.toString() for w in windows)
+    assert [r.seq for r in log.orderBy("fetch_seq").collect()] == list(range(30))
+    del log, windows
+    gc.collect()
+    assert _persisted(spark) == before
+
+
 def test_global_sequence_adaptive_prefix_on_degenerate_input(spark):
     """ADVICE r2: URLs sharing a common prefix LONGER than prefix_len
     must not collapse step 1 into one partition — the fine length is
